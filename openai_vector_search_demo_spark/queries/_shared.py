@@ -25,7 +25,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from openai_vector_search_demo_spark.caching import scoped_persist
-from openai_vector_search_demo_spark.stores import read_probed_partitions
+from openai_vector_search_demo_spark.stores import (
+    ensure_store,
+    read_probed_partitions,
+)
 from openai_vector_search_demo_spark.config import (
     HIGHLIGHT_PREFIX,
     HIGHLIGHT_SUFFIX,
@@ -178,8 +181,11 @@ def run_concurrent(thunks):
     curve slots use this: N independent serving points cost max(point)
     wall-clock instead of sum(point) — exactly how a real serving tier
     overlaps scheduler round-trips at any scale.  Exceptions propagate
-    to the caller; results return in thunk order."""
-    import threading
+    to the caller; results return in thunk order.  The threads are
+    ``InheritableThread``s, so every job a thunk starts carries the
+    caller's local properties (job group, scheduler pool) — credited to,
+    and cancellable with, the caller's group."""
+    from pyspark import InheritableThread
 
     results: list = [None] * len(thunks)
     errors: list = [None] * len(thunks)
@@ -190,7 +196,7 @@ def run_concurrent(thunks):
         except BaseException as exc:  # noqa: BLE001 — re-raised below
             errors[i] = exc
 
-    threads = [threading.Thread(target=runner, args=(i, fn))
+    threads = [InheritableThread(target=runner, args=(i, fn))
                for i, fn in enumerate(thunks)]
     for th in threads:
         th.start()
@@ -323,6 +329,7 @@ __all__ = [
     "F",
     "scoped_persist",
     "read_probed_partitions",
+    "ensure_store",
     "HIGHLIGHT_PREFIX",
     "HIGHLIGHT_SUFFIX",
     "KEYWORD_STOPWORDS",

@@ -259,7 +259,9 @@ def s1_s2_doc_crack(spark: SparkSession, sf_dir: str) -> DataFrame:
     path-free and byte-deterministic, so the driver value-checks the binary
     extraction against the pinned VALUES oracle.  The record `id` column is
     excluded by design: it keys on the absolute doc_path, which lives in a
-    per-run temp directory.
+    per-run temp directory.  A missing sample PDF raises
+    ``FileNotFoundError``: the oracle pins its 15 pages, and serving the
+    other 3 rows alone would be a silent short answer.
     """
     import shutil
     import tempfile
@@ -279,8 +281,10 @@ def s1_s2_doc_crack(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["one paragraph of text", "and a second one"]))
     sample = Path("/root/reference/sample_docs/"
                   "Easy_recipes_Boston_University.pdf")
-    if sample.exists():  # S1 on the reference's own input document
-        shutil.copy(sample, d / "c.pdf")
+    if not sample.exists():  # S1 runs on the reference's own document
+        raise FileNotFoundError(
+            f"s1_s2_doc_crack needs the reference sample PDF at {sample}")
+    shutil.copy(sample, d / "c.pdf")
     chunks = crack_and_ingest(read_raw(spark, str(d)))
     return (chunks.select(
                 F.element_at(F.split("doc_path", "/"), -1).alias("doc"),

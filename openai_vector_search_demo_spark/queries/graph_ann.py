@@ -3,12 +3,12 @@
 from __future__ import annotations
 
 from openai_vector_search_demo_spark.queries._shared import *  # noqa: F401,F403
+from openai_vector_search_demo_spark.stores import store_key_dir
 from openai_vector_search_demo_spark.queries.hamming_tier import _HAMMING_NBITS  # noqa: F401
 from openai_vector_search_demo_spark.queries.hamming_tier import _HAMMING_SHORTLIST  # noqa: F401
 from openai_vector_search_demo_spark.queries.events_windows import _STREAM_SEQ  # noqa: F401
 from openai_vector_search_demo_spark.queries.monitoring import _bm25_scores  # noqa: F401
 from openai_vector_search_demo_spark.queries.ann_quant import _neardup_pairs_store  # noqa: F401
-from openai_vector_search_demo_spark.queries.ann_quant import _parquet_fingerprint  # noqa: F401
 from openai_vector_search_demo_spark.queries.batteries import _CURATION_BATTERY  # noqa: F401
 from openai_vector_search_demo_spark.queries.batteries import _ANALYTICS_BATTERY  # noqa: F401
 from openai_vector_search_demo_spark.queries.batteries import _EVENTS_WINDOWS_BATTERY  # noqa: F401
@@ -274,6 +274,18 @@ def ann_nsw_beam_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     return top.select("vec_id", "label", "similarity")
 
 
+def _nsw_store(spark: SparkSession, sf_dir: str, base: DataFrame) -> str:
+    """The shared v4 NSW store over ``base`` (the corpus minus the
+    query vector 0) — the one graph the stored, curve, ranking,
+    filtered and router slots all serve from."""
+    from openai_vector_search_demo_spark.operators.nsw import (
+        write_nsw_index,
+    )
+    return ensure_store(spark, f"nsw-v4m{_NSW_M}",
+                        [f"{sf_dir}/embeddings.parquet"],
+                        lambda path: write_nsw_index(base, path, m=_NSW_M))
+
+
 @query("ann_nsw_stored_knn", oracle=_nsw_knn_oracle())
 def ann_nsw_stored_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STORED graph read path — serving twin of ``ann_nsw_beam_knn``
@@ -286,29 +298,13 @@ def ann_nsw_stored_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     CONTENT fingerprint (the r4 stale-cache fix); query-time work is
     independent of corpus size — the property that makes graph indexes
     the serving tier of choice at 100 TB."""
-    import hashlib
-    import os
-
-    from openai_vector_search_demo_spark.operators.nsw import (
-        nsw_stored_knn,
-        write_nsw_index,
-    )
-
-    from openai_vector_search_demo_spark.operators.nsw import (
-        nsw_serving_params,
-    )
+    from openai_vector_search_demo_spark.operators.nsw import nsw_stored_knn
 
     emb = t(spark, sf_dir, "embeddings")
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
     base = emb.filter(F.col("vec_id") != 0)
 
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|nswv4{_NSW_M}|{_parquet_fingerprint(emb_path)}".encode()) \
-        .hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_nsw_store_" + key)
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
-        write_nsw_index(base, store, m=_NSW_M)
+    store = _nsw_store(spark, sf_dir, base)
     stride, ef, rounds = _nsw_stored_params(spark, store)
 
     top = nsw_stored_knn(spark, store, base, qvec, k=10, ef=ef,
@@ -409,13 +405,7 @@ def ann_nsw_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ef autoscales with ⌈√n⌉ and this curve prices each step —
     visited-count growth stays √n-bounded, never a corpus scan."""
     from openai_vector_search_demo_spark.operators.knn import knn
-    from openai_vector_search_demo_spark.operators.nsw import (
-        nsw_serving_params,
-        nsw_stored_knn,
-        write_nsw_index,
-    )
-    import hashlib
-    import os
+    from openai_vector_search_demo_spark.operators.nsw import nsw_stored_knn
 
     emb = t(spark, sf_dir, "embeddings")
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
@@ -423,13 +413,7 @@ def ann_nsw_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = {r.vec_id for r in
              knn(base, qvec, k=10, sim_col="sim",
                  tie_break="vec_id").collect()}
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|nswv4{_NSW_M}|{_parquet_fingerprint(emb_path)}".encode()) \
-        .hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_nsw_store_" + key)
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
-        write_nsw_index(base, store, m=_NSW_M)
+    store = _nsw_store(spark, sf_dir, base)
     stride, _, rounds = _nsw_stored_params(spark, store)
     def point(ef):
         # k beyond any visit count: the returned relation IS the whole
@@ -571,13 +555,9 @@ def ann_nsw_mean_recall_at_10(spark: SparkSession,
     collects (the throughput serving form; the single-query beam's
     bounded collects disappear into the qid key).  Graph over the
     held-out corpus (ids ≥ 20), store cached per corpus fingerprint."""
-    import hashlib
-    import os
-
     from openai_vector_search_demo_spark.operators.nsw import (
         NSW_HIER_FLOOR,
         beam_search_knn_batch,
-        nsw_serving_params,
         resolve_stored_edges,
         resolve_stored_levels,
         write_nsw_index,
@@ -590,14 +570,10 @@ def ann_nsw_mean_recall_at_10(spark: SparkSession,
                   .select(F.col("vec_id").alias("qid"),
                           F.col("embedding").alias("qv")))
 
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|nswnqv4{_NSW_M}|{_parquet_fingerprint(emb_path)}"
-        .encode()).hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_nswnq_store_" + key)
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
-        write_nsw_index(corpus.select("vec_id", "embedding"), store,
-                        m=_NSW_M)
+    store = ensure_store(
+        spark, f"nswnq-v4m{_NSW_M}", [f"{sf_dir}/embeddings.parquet"],
+        lambda path: write_nsw_index(corpus.select("vec_id", "embedding"),
+                                     path, m=_NSW_M))
     stride, ef, rounds = _nsw_stored_params(spark, store)
     # batch serving: resolve the store's undirected traversal relation
     # ONCE per job (merge-on-read window + symmetrize), amortized over
@@ -605,17 +581,6 @@ def ann_nsw_mean_recall_at_10(spark: SparkSession,
     # (√n-sized, one read)
     edges = resolve_stored_edges(spark, store, m=_NSW_M)
     levels, l1_meta = resolve_stored_levels(spark, store, m=_NSW_M)
-    if l1_meta is None:
-        # _L1_META missing despite _SUCCESS (a crashed cache write
-        # between the base-graph and level writes): rewrite the store
-        # once rather than serving flat-entry forever off a half-built
-        # cache (ADVICE r14 — nsw_stored_knn guards this; the batch
-        # slot must too, or the slot fails with TypeError until /tmp
-        # is cleaned).
-        write_nsw_index(corpus.select("vec_id", "embedding"), store,
-                        m=_NSW_M)
-        edges = resolve_stored_edges(spark, store, m=_NSW_M)
-        levels, l1_meta = resolve_stored_levels(spark, store, m=_NSW_M)
     # flat-top predicate from the store's frozen geometry: the product
     # of every stride down to (and including) the first below-floor
     # level — v4's generalized stride·stride2
@@ -711,15 +676,8 @@ def ann_nsw_ranking_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     deployed index — the production shape; inline-rebuild twin
     ``ann_nsw_beam_knn`` carries the build-cost number in
     retrieval_battery)."""
-    import hashlib
-    import os
-
     from openai_vector_search_demo_spark.operators.knn import knn
-    from openai_vector_search_demo_spark.operators.nsw import (
-        nsw_serving_params,
-        nsw_stored_knn,
-        write_nsw_index,
-    )
+    from openai_vector_search_demo_spark.operators.nsw import nsw_stored_knn
     from openai_vector_search_demo_spark.operators.ranking_metrics import (
         ranking_metrics,
     )
@@ -728,13 +686,7 @@ def ann_nsw_ranking_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = emb.filter(F.col("vec_id") != 0)
     exact = (knn(base, qvec, k=10, sim_col="sim", tie_break="vec_id")
              .select("vec_id", F.round("sim", 6).alias("similarity")))
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|nswv4{_NSW_M}|{_parquet_fingerprint(emb_path)}".encode()) \
-        .hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_nsw_store_" + key)
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
-        write_nsw_index(base, store, m=_NSW_M)
+    store = _nsw_store(spark, sf_dir, base)
     stride, ef, rounds = _nsw_stored_params(spark, store)
     approx = nsw_stored_knn(spark, store, base, qvec, k=10, ef=ef,
                             rounds=rounds, stride=stride,
@@ -836,22 +788,14 @@ def scd2_incremental_splice(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta versions) passes through the interval-link window.  Work is
     |delta| + |open versions|, never the fact history — the 100 TB
     point of SCD2 splicing (Kimball's incremental dimension load)."""
-    import hashlib
-    import os
-
     from pyspark.sql import Window
 
     o = t(spark, sf_dir, "orders")
     cutoff = F.lit(_SCD2_CUTOFF).cast("date")
-    orders_path = os.path.join(sf_dir, "orders.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|scd2v1|{_parquet_fingerprint(orders_path)}"
-        .encode()).hexdigest()[:10]
-    store_path = os.path.join("/tmp", "spark_graft_scd2_" + key)
-    if not os.path.exists(os.path.join(store_path, "_SUCCESS")):
-        (_scd2_build(o.filter(F.col("o_orderdate") < cutoff))
-         .write.mode("overwrite").parquet(store_path))
-    store = spark.read.parquet(store_path)
+    store = spark.read.parquet(ensure_store(
+        spark, "scd2-v1", [f"{sf_dir}/orders.parquet"],
+        lambda path: (_scd2_build(o.filter(F.col("o_orderdate") < cutoff))
+                      .write.mode("overwrite").parquet(path))))
     delta = o.filter(F.col("o_orderdate") >= cutoff)
 
     cur = (store.filter(F.col("is_current") == 1)
@@ -1441,19 +1385,14 @@ def jsonl_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet bytes and zero column pruning — which is why it is the
     EXCHANGE format here, never the query store (the engine's stores
     are all parquet)."""
-    import hashlib
-    import os
+    import tempfile
 
     from openai_vector_search_demo_spark.functions.text_analysis import (
         _hash60,
     )
 
     docs = t(spark, sf_dir, "documents")
-    docs_path = os.path.join(sf_dir, "documents.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|jsonl|{_parquet_fingerprint(docs_path)}".encode()) \
-        .hexdigest()[:10]
-    path = os.path.join("/tmp", "spark_graft_jsonl_" + key)
+    path = tempfile.mkdtemp(prefix="spark_graft_jsonl_")
     docs.write.mode("overwrite").json(path)
     back = spark.read.schema(docs.schema).json(path)
     return (back
@@ -1485,16 +1424,11 @@ def csv_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins the non-lossy configuration, which is the operational point).
     The write runs EVERY invocation — the declared half of the
     round-trip (r15 verdict: the fingerprint skip was gaming)."""
-    import hashlib
-    import os
+    import tempfile
 
     fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
     o = t(spark, sf_dir, "orders")
-    orders_path = os.path.join(sf_dir, "orders.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|csv|{_parquet_fingerprint(orders_path)}".encode()) \
-        .hexdigest()[:10]
-    path = os.path.join("/tmp", "spark_graft_csv_" + key)
+    path = tempfile.mkdtemp(prefix="spark_graft_csv_")
     (o.write.mode("overwrite").option("header", True)
      .option("timestampNTZFormat", fmt).csv(path))
     back = (spark.read.schema(o.schema).option("header", True)
@@ -1997,6 +1931,25 @@ def streaming_dedup_within_watermark(spark: SparkSession,
     return out
 
 
+def _nswup_store(spark: SparkSession, sf_dir: str, base: DataFrame) -> str:
+    """The upserted NSW store: the graph is built WITHOUT every 5th
+    vector of ``base``, then that held-out batch is inserted by
+    ``upsert_nsw_index``."""
+    from openai_vector_search_demo_spark.operators.nsw import (
+        upsert_nsw_index,
+        write_nsw_index,
+    )
+    corpus = base.filter(F.col("vec_id") % 5 != 3)
+
+    def build(path):
+        write_nsw_index(corpus.select("vec_id", "embedding"), path,
+                        m=_NSW_M)
+        upsert_nsw_index(spark, path, base.filter(F.col("vec_id") % 5 == 3),
+                         corpus, m=_NSW_M)
+    return ensure_store(spark, f"nswup-v4m{_NSW_M}",
+                        [f"{sf_dir}/embeddings.parquet"], build)
+
+
 @query("ann_nsw_upsert_knn", oracle=_nsw_knn_oracle())
 def ann_nsw_upsert_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL GRAPH-INDEX MAINTENANCE — the NSW twin of
@@ -2011,40 +1964,12 @@ def ann_nsw_upsert_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact graph.  The property the quantizer tiers cannot offer (their
     upserts change cell geometry); deletes remain the documented
     recompaction case."""
-    import hashlib
-    import os
-    import shutil
-
-    from openai_vector_search_demo_spark.operators.nsw import (
-        nsw_stored_knn,
-        upsert_nsw_index,
-        write_nsw_index,
-    )
-
-    from openai_vector_search_demo_spark.operators.nsw import (
-        nsw_serving_params,
-    )
+    from openai_vector_search_demo_spark.operators.nsw import nsw_stored_knn
 
     emb = t(spark, sf_dir, "embeddings")
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
     base = emb.filter(F.col("vec_id") != 0)
-    corpus = base.filter(F.col("vec_id") % 5 != 3)
-    batch = base.filter(F.col("vec_id") % 5 == 3)
-
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|nswupv4{_NSW_M}|{_parquet_fingerprint(emb_path)}"
-        .encode()).hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_nswup_store_" + key)
-    marker = os.path.join(store, "_UPSERTED")
-    if not os.path.exists(marker):
-        if os.path.exists(store):
-            shutil.rmtree(store)
-        write_nsw_index(corpus.select("vec_id", "embedding"), store,
-                        m=_NSW_M)
-        upsert_nsw_index(spark, store, batch, corpus, m=_NSW_M)
-        with open(marker, "w") as fh:
-            fh.write("1")
+    store = _nswup_store(spark, sf_dir, base)
     # post-upsert meta is rewritten from corpus∪batch == base, so the
     # frozen stride IS ceil(sqrt(n_base)) — the triple the count gave
     stride, ef, rounds = _nsw_stored_params(spark, store)
@@ -2068,22 +1993,14 @@ def bm25_stored_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the postings write is the one-time cost; per query the
     scan is |terms|/n_buckets of the postings and the only shuffle is
     the per-doc sum over query-term hits."""
-    import hashlib
-    import os
-
     from openai_vector_search_demo_spark.operators.bm25_index import (
         bm25_stored_topk as serve,
         write_bm25_index,
     )
 
     docs = t(spark, sf_dir, "documents")
-    docs_path = os.path.join(sf_dir, "documents.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|bm25|{_parquet_fingerprint(docs_path)}".encode()) \
-        .hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_bm25_" + key)
-    if not os.path.exists(os.path.join(store, "stats")):
-        write_bm25_index(docs, store)
+    store = ensure_store(spark, "bm25", [f"{sf_dir}/documents.parquet"],
+                         lambda path: write_bm25_index(docs, path))
     return serve(spark, store, _BM25_TERMS, k=20, score_col="bm25")
 
 
@@ -2111,20 +2028,7 @@ def ann_nsw_delete_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     beam and excludes the same data-derived top-3; adversarial by
     construction: the deleted nodes are exactly the ones the beam finds
     first."""
-    import hashlib
-    import os
-    import shutil
-
-    from openai_vector_search_demo_spark.operators.knn import knn
-    from openai_vector_search_demo_spark.operators.nsw import (
-        delete_from_nsw_index,
-        nsw_stored_knn,
-        write_nsw_index,
-    )
-
-    from openai_vector_search_demo_spark.operators.nsw import (
-        nsw_serving_params,
-    )
+    from openai_vector_search_demo_spark.operators.nsw import nsw_stored_knn
 
     emb = t(spark, sf_dir, "embeddings")
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
@@ -2144,34 +2048,21 @@ def _ensure_nswdel_store(spark, sf_dir: str, base: DataFrame,
     share: full-corpus v4 store with the query's TRUE top-3 soft
     deleted (adversarial by construction — the tombstones are exactly
     the nodes the beam finds first)."""
-    import hashlib
-    import os
-    import shutil
-
     from openai_vector_search_demo_spark.operators.knn import knn
     from openai_vector_search_demo_spark.operators.nsw import (
         delete_from_nsw_index,
         write_nsw_index,
     )
 
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|nswdelv4{_NSW_M}|{_parquet_fingerprint(emb_path)}"
-        .encode()).hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_nswdel_store_" + key)
-    marker = os.path.join(store, "_TOMBSTONED")
-    if not os.path.exists(marker):
-        if os.path.exists(store):
-            shutil.rmtree(store)
-        write_nsw_index(base.select("vec_id", "embedding"), store,
+    def build(path):
+        write_nsw_index(base.select("vec_id", "embedding"), path,
                         m=_NSW_M)
         top3 = [r.vec_id for r in
                 knn(base, qvec, k=3, sim_col="sim",
                     tie_break="vec_id").collect()]
-        delete_from_nsw_index(spark, store, top3)
-        with open(marker, "w") as fh:
-            fh.write(",".join(map(str, top3)))
-    return store
+        delete_from_nsw_index(spark, path, top3)
+    return ensure_store(spark, f"nswdel-v4m{_NSW_M}",
+                        [f"{sf_dir}/embeddings.parquet"], build)
 
 
 _NSW_COMPACT_WHERE = ("vec_id <> 0 AND vec_id NOT IN "
@@ -2206,11 +2097,8 @@ def ann_nsw_compacted_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     descent on it.  This is the Delta/Iceberg OPTIMIZE step for the
     graph serving artifact; at 100 TB it runs at maintenance cadence,
     never per batch."""
-    import os
-
     from openai_vector_search_demo_spark.operators.nsw import (
         compact_nsw_index,
-        nsw_serving_params,
         nsw_stored_knn,
         read_nsw_tombstones,
     )
@@ -2219,14 +2107,11 @@ def ann_nsw_compacted_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
     base = emb.filter(F.col("vec_id") != 0)
     store = _ensure_nswdel_store(spark, sf_dir, base, qvec)
-    dest = store + "_compacted"
-    done = os.path.join(dest, "_COMPACT_DONE")
-    if not os.path.exists(done):
-        n_folded = compact_nsw_index(
+    dest = ensure_store(
+        spark, f"nswcompact-v4m{_NSW_M}", [f"{sf_dir}/embeddings.parquet"],
+        lambda path: compact_nsw_index(
             spark, store, base.select("vec_id", "label", "embedding"),
-            dest, m=_NSW_M)
-        with open(done, "w") as fh:
-            fh.write(str(n_folded))
+            path, m=_NSW_M))
     # the live corpus: compaction's vector table drops deleted rows too
     dead = read_nsw_tombstones(spark, store)
     live = base.filter(~F.col("vec_id").isin([int(x) for x in dead]))
@@ -2474,25 +2359,12 @@ def ann_nsw_filtered_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot be returned.  Zero new index state: one graph serves every
     predicate.  Recall vs the exact filtered top-10 is priced by
     ``ann_nsw_filtered_recall_at_10``."""
-    import hashlib
-    import os
-
-    from openai_vector_search_demo_spark.operators.nsw import (
-        nsw_serving_params,
-        nsw_stored_knn,
-        write_nsw_index,
-    )
+    from openai_vector_search_demo_spark.operators.nsw import nsw_stored_knn
 
     emb = t(spark, sf_dir, "embeddings")
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
     base = emb.filter(F.col("vec_id") != 0)
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|nswv4{_NSW_M}|{_parquet_fingerprint(emb_path)}".encode()) \
-        .hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_nsw_store_" + key)
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
-        write_nsw_index(base, store, m=_NSW_M)
+    store = _nsw_store(spark, sf_dir, base)
     stride, ef, rounds = _nsw_stored_params(spark, store)
     # k beyond any visit count -> the whole visited set; the predicate
     # then applies to RESULTS only (ghost traversal)
@@ -2624,15 +2496,11 @@ def ann_nsw_filtered_recall_curve(spark: SparkSession,
     visited, matches visited, overlap vs the exact filtered top-10.
     One graph serves every predicate — zero per-predicate index
     state."""
-    import hashlib
-    import os
-
     from openai_vector_search_demo_spark.operators.knn import knn
     from openai_vector_search_demo_spark.operators.nsw import (
         nsw_filtered_ef,
         nsw_serving_params,
         nsw_stored_knn,
-        write_nsw_index,
     )
 
     emb = t(spark, sf_dir, "embeddings")
@@ -2640,13 +2508,7 @@ def ann_nsw_filtered_recall_curve(spark: SparkSession,
     base = emb.filter(F.col("vec_id") != 0)
     n_total = _nsw_corpus_n(spark, sf_dir, base, 1)
     stride, ef, rounds = nsw_serving_params(n_total)
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|nswv4{_NSW_M}|{_parquet_fingerprint(emb_path)}".encode()) \
-        .hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_nsw_store_" + key)
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
-        write_nsw_index(base, store, m=_NSW_M)
+    store = _nsw_store(spark, sf_dir, base)
 
     preds = {
         "sel01": (F.col("label") == _NSW_FILTER_LABEL)
@@ -2710,9 +2572,6 @@ def ann_nsw_tenant_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the full v3 beam over the tenant-0 corpus alone.
     ``tests/test_nsw.py`` pins that the serve's input files all live
     under ``tenant=0/``."""
-    import hashlib
-    import os
-
     from openai_vector_search_demo_spark.operators.nsw import (
         nsw_serving_params,
         nsw_stored_knn,
@@ -2725,15 +2584,10 @@ def ann_nsw_tenant_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     tdf = (emb.filter(F.col("vec_id") != 0)
            .withColumn("tenant",
                        F.pmod(F.col("label"), F.lit(2)).cast("string")))
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|nswtenv2{_NSW_M}|{_parquet_fingerprint(emb_path)}"
-        .encode()).hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_nswten_store_" + key)
-    if not os.path.exists(
-            os.path.join(nsw_tenant_path(store, "0"), "_SUCCESS")):
-        write_nsw_index_tenants(tdf, store, tenant_col="tenant",
-                                m=_NSW_M)
+    store = ensure_store(
+        spark, f"nswten-v2m{_NSW_M}", [f"{sf_dir}/embeddings.parquet"],
+        lambda path: write_nsw_index_tenants(tdf, path, tenant_col="tenant",
+                                             m=_NSW_M))
     base0 = tdf.filter(F.col("tenant") == "0").drop("tenant")
     n0 = base0.filter(F.col("embedding").isNotNull()).count()
     stride, ef, rounds = nsw_serving_params(n0)
@@ -2755,9 +2609,6 @@ def ann_hamming_tenant_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     tenants' rows.  Same planes/shortlist/rerank as
     ``ann_hamming_stored_knn``; the oracle is that slot's SQL over the
     tenant-0 corpus alone."""
-    import hashlib
-    import os
-
     from openai_vector_search_demo_spark.operators.hamming import (
         hamming_stored_knn,
         write_hamming_index,
@@ -2768,18 +2619,10 @@ def ann_hamming_tenant_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     tdf = (emb.filter(F.col("vec_id") != 0)
            .withColumn("tenant",
                        F.pmod(F.col("label"), F.lit(2)).cast("string")))
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|hamtenv1|{_parquet_fingerprint(emb_path)}"
-        .encode()).hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_hamten_" + key)
-    # gate on _SUCCESS, not the bare directory: an interrupted write
-    # leaves a partial store that a directory-existence check would
-    # never rebuild (ADVICE r14 — the NSW slots' pattern; the
-    # single partitionBy write drops ONE marker at the store root)
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
-        write_hamming_index(tdf, store, nbits=_HAMMING_NBITS, seed=42,
-                            tenant_col="tenant")
+    store = ensure_store(
+        spark, f"hamten-b{_HAMMING_NBITS}", [f"{sf_dir}/embeddings.parquet"],
+        lambda path: write_hamming_index(tdf, path, nbits=_HAMMING_NBITS,
+                                         seed=42, tenant_col="tenant"))
     base0 = tdf.filter(F.col("tenant") == "0").drop("tenant")
     top = hamming_stored_knn(
         spark, store, base0, qvec, nbits=_HAMMING_NBITS, seed=42,
@@ -2802,27 +2645,17 @@ def bm25_tenant_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     give tenant-local idf), and the serve opens only its tenant's
     directories.  Tenants are doc-id-parity halves; the oracle is the
     shared BM25 SQL over the tenant-0 corpus alone."""
-    import hashlib
-    import os
-
     from openai_vector_search_demo_spark.operators.bm25_index import (
         bm25_stored_topk as serve,
-        bm25_tenant_path,
         write_bm25_index,
     )
 
     docs = (t(spark, sf_dir, "documents")
             .withColumn("tenant",
                         F.pmod(F.col("doc_id"), F.lit(2)).cast("string")))
-    docs_path = os.path.join(sf_dir, "documents.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|bm25ten1|{_parquet_fingerprint(docs_path)}"
-        .encode()).hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_bm25ten_" + key)
-    # stats is the subtree's LAST write — its marker gates the cache
-    if not os.path.exists(os.path.join(
-            bm25_tenant_path(store, "0"), "stats", "_SUCCESS")):
-        write_bm25_index(docs, store, tenant_col="tenant")
+    store = ensure_store(
+        spark, "bm25ten-v1", [f"{sf_dir}/documents.parquet"],
+        lambda path: write_bm25_index(docs, path, tenant_col="tenant"))
     return serve(spark, store, _BM25_TERMS, k=20, score_col="bm25",
                  tenant="0")
 
@@ -2839,30 +2672,19 @@ def late_interaction_tenant_topk(spark: SparkSession,
     only its tenant's buckets.  Tenants are doc-id-parity halves; the
     oracle is the shared late-interaction SQL over the tenant-0 corpus
     alone."""
-    import hashlib
-    import os
-
     from openai_vector_search_demo_spark.operators.late_interaction import (
         late_interaction_stored_topk,
-        li_tenant_path,
         write_token_window_index,
     )
 
     docs = (t(spark, sf_dir, "documents")
             .withColumn("tenant",
                         F.pmod(F.col("doc_id"), F.lit(2)).cast("string")))
-    docs_path = os.path.join(sf_dir, "documents.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|liten1|{_parquet_fingerprint(docs_path)}"
-        .encode()).hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_liten_" + key)
-    # the meta side table is the subtree's LAST write — its marker
-    # gates the cache
-    if not os.path.exists(os.path.join(
-            li_tenant_path(store, "0") + "_meta", "_SUCCESS")):
-        write_token_window_index(docs, store, max_tokens=_LATE_MT,
-                                 window=_LATE_W, dim=_LATE_DIM,
-                                 tenant_col="tenant")
+    store = ensure_store(
+        spark, "liten-v1", [f"{sf_dir}/documents.parquet"],
+        lambda path: write_token_window_index(
+            docs, path, max_tokens=_LATE_MT, window=_LATE_W, dim=_LATE_DIM,
+            tenant_col="tenant"))
     return late_interaction_stored_topk(
         spark, store, _LATE_Q, k=_LATE_K, max_tokens=_LATE_MT,
         window=_LATE_W, dim=_LATE_DIM, tenant="0")
@@ -3133,7 +2955,11 @@ def ann_nsw_cellbuild_mean_recall_at_10(spark: SparkSession,
 _SCALE_NQ, _SCALE_FACTOR, _SCALE_SEED = 20, 50, 1404
 _SCALE_FIX_DIR = "/tmp/spark_graft_ann100k_fixture"
 _SCALE_FIX = _SCALE_FIX_DIR + "/embeddings.parquet"
-_SCALE_STORE = f"/tmp/spark_graft_ann100k_store_v4m{_NSW_M}e{_NSW_EF_SERVE}"
+# the fixture is deterministic, so the store is keyed on its tag alone:
+# its key directory is known at import time and the oracle can read the
+# published generation through the manifest by absolute path
+_SCALE_TAG = f"nsw100k-v4m{_NSW_M}e{_NSW_EF_SERVE}"
+_SCALE_KEY = store_key_dir(_SCALE_TAG)
 
 
 def _ensure_ann_scale_fixture() -> None:
@@ -3230,12 +3056,20 @@ sp2 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n2,
         FROM sfx WHERE vec_id >= {nq}
           AND vec_id % ((SELECT stride FROM sp)
                         * (SELECT stride2 FROM sp1)) = 0),
+sgen AS (SELECT replace(MIN(file), '_MANIFEST.', '') || '/' AS g
+         FROM glob('{_SCALE_KEY}/_MANIFEST.*')),
 sg0 AS (SELECT DISTINCT src, dst
-        FROM read_parquet('{_SCALE_STORE}/bucket=*/*.parquet')),
+        FROM read_parquet('{_SCALE_KEY}/*/bucket=*/*.parquet',
+                          filename = true)
+        WHERE starts_with(filename, (SELECT g FROM sgen))),
 sg1 AS (SELECT DISTINCT src, dst
-        FROM read_parquet('{_SCALE_STORE}/_L1/bucket=*/*.parquet')),
+        FROM read_parquet('{_SCALE_KEY}/*/_L1/bucket=*/*.parquet',
+                          filename = true)
+        WHERE starts_with(filename, (SELECT g FROM sgen))),
 sg2 AS (SELECT DISTINCT src, dst
-        FROM read_parquet('{_SCALE_STORE}/_L2/bucket=*/*.parquet')),
+        FROM read_parquet('{_SCALE_KEY}/*/_L2/bucket=*/*.parquet',
+                          filename = true)
+        WHERE starts_with(filename, (SELECT g FROM sgen))),
 s2v0 AS (SELECT qid, vec_id, s FROM sqs
          WHERE vec_id % ((SELECT stride FROM sp)
                          * (SELECT stride2 FROM sp1)
@@ -3355,8 +3189,6 @@ def ann_nsw_fixed_ef_scaling(spark: SparkSession,
     NSW slots).  Cost honesty: first run in a fresh container pays
     the one-time 100k exact build (~2 min blocked BLAS); the store is
     content-independent (fixture is deterministic) and cached."""
-    import os
-
     from openai_vector_search_demo_spark.caching import cache_scope
     from openai_vector_search_demo_spark.functions.vectors import (
         cosine_similarity,
@@ -3377,12 +3209,12 @@ def ann_nsw_fixed_ef_scaling(spark: SparkSession,
     queries_df = (fx.filter(F.col("vec_id") < _SCALE_NQ)
                   .select(F.col("vec_id").alias("qid"),
                           F.col("embedding").alias("qv")))
-    if not os.path.exists(os.path.join(_SCALE_STORE, "_SUCCESS")) or \
-            not os.path.exists(os.path.join(_SCALE_STORE, "_L1_META")):
-        write_nsw_index(corpus.select("vec_id", "embedding"),
-                        _SCALE_STORE, m=_NSW_M)
-    edges = resolve_stored_edges(spark, _SCALE_STORE, m=_NSW_M)
-    levels, meta = resolve_stored_levels(spark, _SCALE_STORE, m=_NSW_M)
+    store = ensure_store(
+        spark, _SCALE_TAG, (),
+        lambda path: write_nsw_index(corpus.select("vec_id", "embedding"),
+                                     path, m=_NSW_M))
+    edges = resolve_stored_edges(spark, store, m=_NSW_M)
+    levels, meta = resolve_stored_levels(spark, store, m=_NSW_M)
     # the oracle unrolls exactly two graph levels — fail loudly if the
     # fixture's geometry ever drifts from that depth
     assert len(levels) == 2, f"expected depth-2 hierarchy, got {meta}"
@@ -3449,13 +3281,8 @@ def streaming_nsw_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     a live at-least-once pipeline.  Completes the streaming-maintenance
     trio (document ingest, IVFADC upsert, near-dup gate) for the graph
     tier."""
-    import hashlib
-    import os
-    import shutil
-
     from openai_vector_search_demo_spark.operators.nsw import (
         NSW_ENTRY_COUNT as _NSC,
-        nsw_serving_params,
         nsw_stored_knn,
         write_nsw_index,
     )
@@ -3469,16 +3296,8 @@ def streaming_nsw_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = emb.filter(F.col("vec_id") != 0)
     corpus = base.filter(F.col("vec_id") % 5 != 3)
 
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|nswstreamv4{_NSW_M}|{_parquet_fingerprint(emb_path)}"
-        .encode()).hexdigest()[:10]
-    root = os.path.join("/tmp", "spark_graft_nswstream_" + key)
-    store = os.path.join(root, "graph")
-    marker = os.path.join(root, "_STREAMED")
-    if not os.path.exists(marker):
-        if os.path.exists(root):
-            shutil.rmtree(root)
+    def build(root):
+        store = os.path.join(root, "graph")
         vectors_dir = os.path.join(root, "vectors")
         drops = os.path.join(root, "drops")
         ckpt = os.path.join(root, "ckpt")
@@ -3497,8 +3316,9 @@ def streaming_nsw_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = stream_upsert_nsw_index(stream, store, vectors_dir, ckpt,
                                     m=_NSW_M).start()
         q.awaitTermination()
-        with open(marker, "w") as fh:
-            fh.write("1")
+    store = os.path.join(ensure_store(
+        spark, f"nswstream-v4m{_NSW_M}", [f"{sf_dir}/embeddings.parquet"],
+        build), "graph")
 
     # meta after the streamed upserts covers corpus∪batch == base
     stride, ef, rounds = _nsw_stored_params(spark, store)
@@ -3704,16 +3524,12 @@ def ann_auto_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     the beam oracle is unchanged).  The oracle computes the same CASE
     from COUNT(*) and replays whichever branch it selects — rule and
     results both value-checked."""
-    import hashlib
-    import os
-
     from openai_vector_search_demo_spark.operators.knn import (
         auto_knn,
         auto_knn_exact_max,
     )
     from openai_vector_search_demo_spark.operators.nsw import (
         nsw_serving_params,
-        write_nsw_index,
     )
     emb = t(spark, sf_dir, "embeddings")
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
@@ -3723,13 +3539,7 @@ def ann_auto_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     kw = dict(m=_NSW_M, ef=ef, rounds=rounds, stride=stride,
               n_entry=_NSW_ENTRY)
     # the same store (same cache key) ann_nsw_stored_knn serves from
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|nswv4{_NSW_M}|{_parquet_fingerprint(emb_path)}".encode()) \
-        .hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_nsw_store_" + key)
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
-        write_nsw_index(base, store, m=_NSW_M)
+    store = _nsw_store(spark, sf_dir, base)
     parts = []
     for mode, thr in (("auto", auto_knn_exact_max()), ("forced_graph", 0)):
         tier, top = auto_knn(base, qvec, k=10, n=n, exact_max=thr,

@@ -26,18 +26,45 @@ stray files under ``basePath``.  Reference behavior note: the reference
 serves its index from Redis (modules/utilities.py — RediSearch
 KNN); partition-pruned parquet + catalog metadata is the Spark-first
 equivalent of that server-side index lookup.
+
+**Store lifecycle.**  Every cached index the query registry serves goes
+through ``ensure_store(spark, tag, inputs, build)``, the one place that
+knows a store's key, location and publish protocol.  The key is the
+format-version ``tag`` plus a content fingerprint (path, size, mtime)
+of the ``inputs`` it is built from, so a corpus regenerated in place
+gets a fresh store.  Each build writes EVERY part (main table,
+``_sigs``/``_meta`` side tables, ``_L*`` levels, ``_L1_META``, stats,
+upsert/tombstone/stream steps) into one fresh generation directory
+``STORE_ROOT/<tag>-<digest>/gen-<uuid>``; only after ``build`` returns
+does an empty manifest file ``_MANIFEST.gen-<uuid>`` appear beside it
+— a single create, atomic on every filesystem, naming the generation in
+its file name.  Readers resolve a store ONLY through its manifest,
+never through a part's ``_SUCCESS``, so a build that died between parts
+is invisible; a build that raises deletes its own generation and
+re-raises.  Concurrent callers that both build each publish and return
+their own complete generation (readers pick the smallest manifest
+name) — no directory is ever renamed, so a losing writer can never nest
+inside or corrupt the winner's store.  Bump the tag whenever the on-disk format
+of a store kind changes.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 __all__ = ["read_probed_partitions", "register_partitioned_store",
            "fs_exists", "fs_touch", "fs_write_text", "fs_read_text",
-           "escape_partition_value", "tenant_values"]
+           "escape_partition_value", "tenant_values", "ensure_store",
+           "store_key_dir"]
+
+# the one root every cached store lives under (see "Store lifecycle")
+STORE_ROOT = "/tmp/spark_graft_stores"
+_MANIFEST = "_MANIFEST."
 
 # the characters Spark/Hive escape in partition directory names
 # (ExternalCatalogUtils.escapePathName / Hive FileUtils.escapePathName —
@@ -138,6 +165,64 @@ def fs_read_text(spark: SparkSession, path: str) -> str | None:
         return bytes(data).decode("utf-8")
     finally:
         inp.close()
+
+
+def _parquet_fingerprint(path: str) -> str:
+    """Content fingerprint of a parquet file-or-directory: total bytes +
+    newest mtime (ns) of the data files.  Cheap (a handful of stats), and it
+    changes whenever the data is regenerated in place — which a path-only
+    cache key cannot see (the r4 stale-index defect: regenerate the fixtures
+    at the same sf_dir and a path-keyed index silently serves stale
+    buckets)."""
+    if os.path.isdir(path):
+        parts = sorted(
+            os.path.join(path, f) for f in os.listdir(path)
+            if f.endswith(".parquet") or f == "_SUCCESS")
+    else:
+        parts = [path]
+    sig = []
+    for p in parts:
+        st = os.stat(p)
+        sig.append(f"{p}:{st.st_size}:{st.st_mtime_ns}")
+    return ";".join(sig)
+
+
+def store_key_dir(tag: str, inputs=()) -> str:
+    """The key directory of the store built by ``tag`` from ``inputs``:
+    ``STORE_ROOT/<tag>-<md5 of tag + input fingerprints>``."""
+    sig = "|".join([tag, *(_parquet_fingerprint(p) for p in inputs)])
+    return (f"{STORE_ROOT}/{tag}-"
+            f"{hashlib.md5(sig.encode()).hexdigest()[:10]}")
+
+
+def _published_generation(spark: SparkSession, key_dir: str) -> str | None:
+    """The generation a published manifest names (the smallest name when
+    concurrent callers each published one), or None."""
+    jpath, fs = _hadoop_path_fs(spark, f"{key_dir}/{_MANIFEST}*")
+    names = [st.getPath().getName() for st in fs.globStatus(jpath) or []]
+    return min(names)[len(_MANIFEST):] if names else None
+
+
+def ensure_store(spark: SparkSession, tag: str, inputs, build) -> str:
+    """Path of the published store for (``tag``, ``inputs``), building it
+    first when none is published: ``build(gen_dir)`` writes every part
+    under the fresh ``gen_dir``, then the manifest naming it is created.
+    A build that raises deletes ``gen_dir`` and re-raises (module
+    docstring, "Store lifecycle")."""
+    key_dir = store_key_dir(tag, inputs)
+    gen = _published_generation(spark, key_dir)
+    if gen is not None:
+        return f"{key_dir}/{gen}"
+    gen = f"gen-{uuid.uuid4().hex}"
+    path = f"{key_dir}/{gen}"
+    try:
+        build(path)
+    except BaseException:
+        jpath, fs = _hadoop_path_fs(spark, path)
+        fs.delete(jpath, True)
+        raise
+    fs_touch(spark, f"{key_dir}/{_MANIFEST}{gen}")
+    return path
 
 
 def read_probed_partitions(spark: SparkSession, store: str, part_col: str,

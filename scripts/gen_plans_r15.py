@@ -94,17 +94,13 @@ def fragment(spark, sf_dir, which, F):
                     " runs driver-side over its collected output):\n")
         return head + explain_str(df)
 
-    # NSW round fragments serve the real store
-    import hashlib
-    from openai_vector_search_demo_spark.queries.ann_quant import (
-        _parquet_fingerprint)
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
+    # NSW round fragments serve the real store the slots serve from
+    from openai_vector_search_demo_spark.queries import (
+        _nsw_store,
+        _nswup_store,
+    )
     if which == "nsw_round_fresh":
-        key = hashlib.md5(
-            f"{sf_dir}|nswv4{16}|{_parquet_fingerprint(emb_path)}"
-            .encode()).hexdigest()[:10]
-        store = os.path.join("/tmp", "spark_graft_nsw_store_" + key)
-        edges = spark.read.parquet(store)
+        edges = spark.read.parquet(_nsw_store(spark, sf_dir, source))
         buckets = sorted({i % 16 for i in ids})
         cand = (edges.filter(F.col("bucket").isin(buckets)
                              & F.col("src").isin(ids))
@@ -117,11 +113,7 @@ def fragment(spark, sf_dir, which, F):
                 " trees):\n" + explain_str(df))
 
     # delta-store lookup fragment: shape differs across trees
-    key = hashlib.md5(
-        f"{sf_dir}|nswupv4{16}|{_parquet_fingerprint(emb_path)}"
-        .encode()).hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_nswup_store_" + key)
-    edges = spark.read.parquet(store)
+    edges = spark.read.parquet(_nswup_store(spark, sf_dir, source))
     buckets = sorted({i % 16 for i in ids})
     from openai_vector_search_demo_spark.operators import nsw as nsw_mod
     import inspect

@@ -71,12 +71,11 @@ timed("curation full query", lambda: registry["curation_pipeline"](spark, sf_dir
 # --- stored ANN stages ---
 emb = t(spark, sf_dir, "embeddings")
 timed("qvec .first()", lambda: emb.filter(F.col("vec_id") == 0).select("embedding").first())
-import hashlib
-store = os.path.join("/tmp", "spark_graft_lsh_store_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10])
-print("store exists:", os.path.exists(os.path.join(store, "_SUCCESS")))
-timed("spark.read.parquet(store) full-listing count", lambda: spark.read.parquet(store).limit(1).count())
 from openai_vector_search_demo_spark.operators.ann import hyperplanes, query_buckets
+from openai_vector_search_demo_spark.queries import _lsh_store
 planes = hyperplanes(64, nbits=8, seed=42)
+store = _lsh_store(spark, sf_dir, emb, planes)
+timed("spark.read.parquet(store) full-listing count", lambda: spark.read.parquet(store).limit(1).count())
 qv = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
 probes = query_buckets(qv, planes, probe_hamming=1)
 existing = [f"{store}/bucket={b}" for b in probes if os.path.isdir(f"{store}/bucket={b}")]

@@ -214,3 +214,207 @@ def test_fs_read_text_roundtrip(spark, tmp_path):
     fs_write_text(spark, p, payload)
     assert fs_read_text(spark, p) == payload
     assert fs_read_text(spark, str(tmp_path / "absent.txt")) is None
+
+
+# --- stored-index lifecycle: ensure_store ---------------------------------
+
+def _fresh_key(spark, tmp_path, name):
+    """(tag, inputs) for a store key no other run shares: a unique tag
+    over a small parquet input under ``tmp_path``."""
+    import uuid
+
+    src = str(tmp_path / "input.parquet")
+    spark.range(10).write.mode("overwrite").parquet(src)
+    return f"test-{name}-{uuid.uuid4().hex[:8]}", [src]
+
+
+def test_ensure_store_failed_build_publishes_nothing(spark, tmp_path):
+    """A build that raises after writing a part leaves no manifest and
+    no generation behind; the next call rebuilds, and later calls serve
+    the published generation without building again."""
+    import os
+    import shutil
+
+    import pytest
+
+    from openai_vector_search_demo_spark.stores import (
+        ensure_store,
+        store_key_dir,
+    )
+
+    tag, inputs = _fresh_key(spark, tmp_path, "raise")
+    key = store_key_dir(tag, inputs)
+    built = []
+
+    def killed(path):
+        built.append(path)
+        spark.range(5).write.parquet(f"{path}/main")
+        raise RuntimeError("writer killed mid-build")
+
+    def good(path):
+        built.append(path)
+        spark.range(5).write.parquet(f"{path}/main")
+
+    try:
+        with pytest.raises(RuntimeError, match="mid-build"):
+            ensure_store(spark, tag, inputs, killed)
+        assert not os.path.exists(built[0])
+        assert not [n for n in os.listdir(key) if n.startswith("_MANIFEST")]
+        path = ensure_store(spark, tag, inputs, good)
+        assert path == built[1]
+        assert spark.read.parquet(f"{path}/main").count() == 5
+        assert ensure_store(spark, tag, inputs, killed) == path
+        assert len(built) == 2
+    finally:
+        shutil.rmtree(key, ignore_errors=True)
+
+
+def test_ensure_store_concurrent_callers_both_served(spark, tmp_path):
+    """Two threads that miss on one key at the same time each build and
+    return a complete generation; a later caller resolves one of them."""
+    import shutil
+    import threading
+
+    from openai_vector_search_demo_spark.stores import (
+        ensure_store,
+        fs_read_text,
+        fs_write_text,
+        store_key_dir,
+    )
+
+    tag, inputs = _fresh_key(spark, tmp_path, "race")
+    both_building = threading.Barrier(2)
+
+    def build(path):
+        both_building.wait(timeout=120)
+        spark.range(100).write.parquet(f"{path}/main")
+        fs_write_text(spark, f"{path}/_meta", "complete")
+
+    paths, errors = [], []
+
+    def call():
+        try:
+            paths.append(ensure_store(spark, tag, inputs, build))
+        except BaseException as exc:  # noqa: BLE001 — asserted below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=call) for _ in range(2)]
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=600)
+            assert not th.is_alive()
+        assert not errors, errors
+        assert len(set(paths)) == 2
+        for p in paths:
+            assert spark.read.parquet(f"{p}/main").count() == 100
+            assert fs_read_text(spark, f"{p}/_meta") == "complete"
+
+        def unexpected(path):
+            raise AssertionError("a published store was rebuilt")
+        assert ensure_store(spark, tag, inputs, unexpected) in paths
+    finally:
+        shutil.rmtree(store_key_dir(tag, inputs), ignore_errors=True)
+
+
+def test_torn_nsw_build_is_rebuilt_not_served(spark, monkeypatch):
+    """The torn-NSW regression: ``write_nsw_index`` writes the base graph
+    (with its ``_SUCCESS``) before ``_L1_META``.  A writer killed between
+    the two used to leave a store every later run accepted, after which
+    ``_nsw_stored_params`` raised TypeError on the missing meta.  Through
+    ``ensure_store`` the torn generation is never published: the next
+    call rebuilds and serves the frozen stride."""
+    import os
+    import shutil
+    import uuid
+
+    import pytest
+
+    from openai_vector_search_demo_spark.operators import nsw
+    from openai_vector_search_demo_spark.queries.graph_ann import (
+        _NSW_M,
+        _nsw_stored_params,
+    )
+    from openai_vector_search_demo_spark.stores import (
+        ensure_store,
+        store_key_dir,
+    )
+    from conftest import SF0001
+
+    src = f"{SF0001}/embeddings.parquet"
+    base = (spark.read.parquet(src).filter(F.col("vec_id") != 0)
+            .select("vec_id", "embedding"))
+    tag = f"test-nsw-{uuid.uuid4().hex[:8]}"
+    base_done = []
+
+    def killed(spark_, path, *args, **kwargs):
+        base_done.append(os.path.exists(os.path.join(path, "_SUCCESS")))
+        raise RuntimeError("writer killed before _L1_META")
+
+    def build(path):
+        nsw.write_nsw_index(base, path, m=_NSW_M)
+
+    try:
+        monkeypatch.setattr(nsw, "_write_hier_meta", killed)
+        with pytest.raises(RuntimeError, match="_L1_META"):
+            ensure_store(spark, tag, [src], build)
+        assert base_done == [True]
+        monkeypatch.undo()
+        store = ensure_store(spark, tag, [src], build)
+        n = base.filter(F.col("embedding").isNotNull()).count()
+        stride = nsw.nsw_serving_params(n)[0]
+        assert _nsw_stored_params(spark, store)[0] == stride
+    finally:
+        shutil.rmtree(store_key_dir(tag, [src]), ignore_errors=True)
+
+
+def test_run_concurrent_jobs_credited_to_caller_group(spark):
+    """Every job a ``run_concurrent`` thunk starts on its own thread
+    carries the caller's job group (so group-scoped job counts and
+    cancellation see it) — and none escapes ungrouped."""
+    import uuid
+
+    from openai_vector_search_demo_spark.queries._shared import (
+        run_concurrent,
+    )
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"run-concurrent-{uuid.uuid4().hex[:8]}"
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "run_concurrent crediting")
+    try:
+        # one RDD action = exactly one job per thunk
+        counts = run_concurrent([
+            lambda n=n: sc.parallelize(range(n), 2).count()
+            for n in (10, 20, 30)])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert counts == [10, 20, 30]
+    assert len(tracker.getJobIdsForGroup(group)) == 3
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped_before
+
+
+def test_queries_keep_no_store_gate_literals():
+    """Structural pin: every cached store in the query registry goes
+    through ``stores.ensure_store``, so no query module spells a
+    ``_SUCCESS`` gate or a ``/tmp`` store path of its own.  The one
+    exception is the 100k scale FIXTURE directory (an input the oracle
+    reads by absolute path, not a store)."""
+    import glob
+    import os
+
+    import openai_vector_search_demo_spark.queries as qpkg
+
+    offenders = []
+    for path in sorted(glob.glob(os.path.join(
+            os.path.dirname(qpkg.__file__), "*.py"))):
+        with open(path, encoding="utf-8") as fh:
+            for no, line in enumerate(fh, 1):
+                if ("_SUCCESS" in line or "/tmp" in line) and \
+                        not line.startswith("_SCALE_FIX_DIR = "):
+                    offenders.append(f"{os.path.basename(path)}:{no}: "
+                                     f"{line.strip()}")
+    assert not offenders, "\n".join(offenders)
