@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from openai_vector_search_demo_spark.functions.text_analysis import tokens
+from openai_vector_search_demo_spark.session import local_frame
 
 __all__ = ["train_bpe_merges", "bpe_segment_stats"]
 
@@ -85,9 +86,9 @@ def train_bpe_merges(df: DataFrame, text_col: str = "text",
         out_rows.append((rnd, left, right, left + right, cnt))
         cur = (cur.select(_apply_merge(left, right).alias("s"), "c")
                .localCheckpoint(eager=True))
-    return spark.createDataFrame(
-        out_rows, "round int, left string, right string, "
-                  "merged string, cnt long")
+    return local_frame(
+        spark, out_rows, "round int, left string, right string, "
+                         "merged string, cnt long")
 
 
 def bpe_segment_stats(df: DataFrame, text_col: str = "text",

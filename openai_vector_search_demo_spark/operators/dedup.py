@@ -45,6 +45,7 @@ from openai_vector_search_demo_spark.functions.text_analysis import (
 from openai_vector_search_demo_spark.functions.vectors import (
     cosine_similarity,
 )
+from openai_vector_search_demo_spark.session import local_frame
 
 
 # ---------------------------------------------------------------------------
@@ -1004,8 +1005,8 @@ def duplicate_clusters(pairs: DataFrame, id_a: str = "id_a",
             from pyspark.sql.types import StructField, StructType
             out_schema = StructType([StructField("id", id_type),
                                      StructField("cluster_id", id_type)])
-            return spark.createDataFrame(
-                sorted(labels.items()), out_schema)
+            return local_frame(spark, sorted(labels.items()),
+                               out_schema)
 
     edges = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))) \
              .localCheckpoint(eager=True)

@@ -86,6 +86,7 @@ from openai_vector_search_demo_spark.functions.vectors import (
     cosine_similarity,
     vector_lit,
 )
+from openai_vector_search_demo_spark.session import local_frame
 
 NSW_M = 16         # out-neighbors kept per node (traversal is SYMMETRIC)
 NSW_EF = 12        # beam-width floor (tests' explicit-knob mode)
@@ -899,7 +900,7 @@ def beam_search_knn(edges, source: DataFrame,
         # is the documented recompaction case (rebuild without them).
         dead = set(exclude_ids)
         out_rows = [r for r in out_rows if r[id_col] not in dead]
-    top = sess.createDataFrame(out_rows[:k], schema)
+    top = local_frame(sess, out_rows[:k], schema)
     return top.withColumnRenamed("_s", sim_col)
 
 
@@ -996,8 +997,8 @@ def beam_search_knn_batch(edges: DataFrame, source: DataFrame,
                     .select("qid", F.col(id_col).alias("src")))
     else:
         seed_df = (q.select("qid").crossJoin(
-            sess.createDataFrame([(int(x),) for x in seeds],
-                                 f"{id_col} long")))
+            local_frame(sess, [(int(x),) for x in seeds],
+                        f"{id_col} long")))
         visited = score(seed_df).localCheckpoint()
         frontier = visited.select("qid", F.col(id_col).alias("src"))
     for _ in range(rounds):
@@ -1157,12 +1158,8 @@ def upsert_nsw_index(spark, path: str, batch: DataFrame,
              .collect())
     if not brows:
         return
-    sess = existing.sparkSession
-    bdf = sess.createDataFrame(
-        [(int(r.id), list(r.v)) for r in brows],
-        "id long, v array<double>")
-    _append_graph_delta(spark, path, brows, ex, m, n_buckets,
-                        batch_df=bdf)
+    bdf = _batch_frame(existing.sparkSession, brows)
+    _append_graph_delta(spark, path, brows, ex, m, n_buckets)
     # store-format contract: the marker tells readers that merge-on-read
     # resolution AND mirror validation are now REQUIRED (a fresh store
     # needs neither — every src has exactly m fwd rows and every mirror
@@ -1213,9 +1210,14 @@ def upsert_nsw_index(spark, path: str, batch: DataFrame,
     _write_hier_meta(spark, path, strides, counts, m, n=n)
 
 
+def _batch_frame(spark, brows) -> DataFrame:
+    """The collected (id, v) batch rows as a local relation."""
+    return local_frame(spark, [(int(r.id), list(r.v)) for r in brows],
+                       "id long, v array<double>")
+
+
 def _append_graph_delta(spark, path: str, brows, existing: DataFrame,
-                        m: int, n_buckets: int,
-                        batch_df: DataFrame | None = None) -> None:
+                        m: int, n_buckets: int) -> None:
     """The exact-insert append for ONE stored graph (base layer or a
     hierarchy level): ``brows`` are collected (id, v) batch rows (KB —
     they ride the closure as a broadcast-by-value), ``existing`` the
@@ -1231,7 +1233,6 @@ def _append_graph_delta(spark, path: str, brows, existing: DataFrame,
     bn = np.linalg.norm(bmat, axis=1)
     bn[bn == 0] = 1.0
     bunit = bmat / bn[:, None]
-    sess = existing.sparkSession
 
     slack = m + 8
 
@@ -1299,15 +1300,16 @@ def _append_graph_delta(spark, path: str, brows, existing: DataFrame,
                     "sim": np.concatenate(out_sim).astype(np.float64)})
 
     # (existing∪batch) × batch sims — batch rides the closure (broadcast
-    # by value); one Arrow pass over the layer, pruned emission
-    # (batch_df lets the base-layer caller reuse its already-built
-    # batch DataFrame instead of re-serializing brows)
-    if batch_df is None:
-        batch_df = sess.createDataFrame(
-            [(int(r.id), list(r.v)) for r in brows],
-            "id long, v array<double>")
-    allnodes = existing.unionByName(batch_df)
-    cross = allnodes.mapInPandas(cross_sims, "src long, dst long, sim double")
+    # by value), pruned emission.  Both branches below (new nodes,
+    # improvements) consume this stream: the lazy local checkpoint
+    # stores its blocks the first time the append's write computes them,
+    # so the Python pass runs once, not once per branch (an eager
+    # checkpoint adds a job of its own; persist() measured slower)
+    allnodes = existing.unionByName(_batch_frame(existing.sparkSession,
+                                                 brows))
+    cross = (allnodes.mapInPandas(cross_sims,
+                                  "src long, dst long, sim double")
+             .localCheckpoint(eager=False))
 
     # new nodes' top-m over C∪B: the kind=1 stream (batch src) unioned
     # over blocks, reduced by the global per-src window
@@ -1360,14 +1362,14 @@ def delete_from_nsw_index(spark, path: str, ids: Sequence[int]) -> None:
     the store's pending-delete backlog, bounded by recompaction cadence
     (rebuild without the tombstoned rows folds it back to zero, the
     IVFADC ``compact`` pattern)."""
-    (spark.createDataFrame([(int(x),) for x in ids], "vec_id long")
+    (local_frame(spark, [(int(x),) for x in ids], "vec_id long")
      .coalesce(1).write.mode("append").parquet(f"{path}/_tombstones"))
 
 
 def read_nsw_tombstones(spark, path: str) -> list[int]:
-    import os
+    from openai_vector_search_demo_spark.stores import fs_exists
     tpath = f"{path}/_tombstones"
-    if not os.path.isdir(tpath):
+    if not fs_exists(spark, tpath):
         return []
     return sorted(r.vec_id for r in spark.read.parquet(tpath)
                   .distinct().collect())

@@ -39,6 +39,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from openai_vector_search_demo_spark.session import local_frame
+
 __all__ = ["train_pq_codebooks", "pq_encode_numpy", "pq_adc_knn",
            "adc_lut", "pq_encode_df", "write_pq_codes",
            "pq_adc_stored_knn", "residual_assign_encode_numpy",
@@ -646,7 +648,8 @@ def ivfpq_stored_knn(spark, store: str, qvec: Sequence[float],
         cand = resolve_ivfpq_versions(cand, id_col)
     elif "batch" in cand.columns:
         cand = cand.drop("batch", "tombstone")
-    lut_df = spark.createDataFrame(
+    lut_df = local_frame(
+        spark,
         [(int(c), [[float(v) for v in row] for row in luts[c]])
          for c in probes],
         "cell int, _lut array<array<double>>")

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from openai_vector_search_demo_spark.caching import scoped_persist
+from openai_vector_search_demo_spark.session import local_frame
 
 
 def exact_quantiles(df: DataFrame, value_col: str,
@@ -129,9 +130,9 @@ def exact_quantiles(df: DataFrame, value_col: str,
         act = active_items()
         if not act:
             break
-        sdf = spark.createDataFrame(
-            [key[0] + (float(key[1]), s["lo"], s["hi"])
-             for key, s in act], schema)
+        sdf = local_frame(
+            spark, [key[0] + (float(key[1]), s["lo"], s["hi"])
+                    for key, s in act], schema)
         cond = (F.col("_v") >= F.col("_slo")) & (F.col("_v") <= F.col("_shi"))
         for c, gc in zip(gcols, gstate):
             cond = cond & (F.col(c) == F.col(gc))
@@ -176,17 +177,17 @@ def exact_quantiles(df: DataFrame, value_col: str,
     out_schema = ", ".join(f"`{c}` string" for c in gcols) \
         + ", q double, value double"
     if not states:                            # empty input: empty result
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     parts = []
     if resolved:
-        parts.append(spark.createDataFrame(
-            [key[0] + (float(key[1]), float(s["val"]))
-             for key, s in resolved], out_schema))
+        parts.append(local_frame(
+            spark, [key[0] + (float(key[1]), float(s["val"]))
+                    for key, s in resolved], out_schema))
     if pending:
         pschema = schema + ", _sk long"
-        sdf = spark.createDataFrame(
-            [key[0] + (float(key[1]), s["lo"], s["hi"], int(s["k"]))
-             for key, s in pending], pschema)
+        sdf = local_frame(
+            spark, [key[0] + (float(key[1]), s["lo"], s["hi"], int(s["k"]))
+                    for key, s in pending], pschema)
         cond = (F.col("_v") >= F.col("_slo")) & (F.col("_v") <= F.col("_shi"))
         for c, gc in zip(gcols, gstate):
             cond = cond & (F.col(c) == F.col(gc))

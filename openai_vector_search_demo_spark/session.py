@@ -9,13 +9,22 @@ One place that encodes the scale posture (SURVEY.md §4.4):
 - **Arrow on** — every Python boundary (pandas UDF, toPandas) is Arrow-batched.
 - **shuffle partitions** default to cores on local mode; on a real cluster this
   is overridden to ~2-3× total executor cores (AQE coalesces down).
+
+Driver-built frames go through ``local_frame``, never a list-built
+``createDataFrame``.  A list-built frame plans as ``Scan ExistingRDD``
+over pickled rows, so EVERY scan of it re-runs ``defaultParallelism``
+Python-worker tasks just to unpickle the driver's own rows; the Arrow
+table ``local_frame`` hands over plans as a ``LocalTableScan`` the JVM
+answers without Python, on any session (Arrow conf on or off — a plain
+``SparkSession`` built without the confs below included).
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def default_parallelism() -> int:
@@ -60,3 +69,23 @@ def get_spark(app_name: str = "openai-vector-search-demo-spark",
     elif not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):
         builder = builder.master(f"local[{cores}]")
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType | str
+                ) -> DataFrame:
+    """DataFrame over driver-side ``rows`` (tuples or Rows, positional)
+    typed by ``schema`` (a ``StructType`` or DDL string) — the same rows
+    and schema ``spark.createDataFrame(rows, schema)`` gives, planned as
+    a Python-free ``LocalTableScan`` (module docstring)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows, strict=True)) or [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=t)
+         for c, t in zip(cols, arrow_schema.types, strict=True)],
+        schema=arrow_schema)
+    return spark.createDataFrame(table, schema)

@@ -239,7 +239,7 @@ def read_probed_partitions(spark: SparkSession, store: str, part_col: str,
         # metastore pattern: the catalog prunes partitions at plan time
         return spark.table(table).filter(F.col(part_col).isin(probes))
     paths = [p for p in (os.path.join(store, f"{part_col}={v}")
-                         for v in probes) if os.path.isdir(p)]
+                         for v in probes) if fs_exists(spark, p)]
     if not paths:
         return (spark.read.parquet(store)
                 .filter(F.col(part_col).isin(probes)).limit(0))

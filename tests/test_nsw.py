@@ -612,6 +612,29 @@ def test_compact_folds_deltas_and_tombstones(spark, emb, tmp_path):
     assert best not in {v for v, _ in got}
 
 
+def test_tombstones_read_through_store_uri(spark, emb, tmp_path):
+    """Soft deletes recorded under a ``file://`` store URI are read back
+    (and folded by compaction) exactly as under the plain path — a
+    driver-local ``os.path`` check would see no tombstones there and
+    serve the deleted ids again."""
+    from openai_vector_search_demo_spark.operators.nsw import (
+        compact_nsw_index,
+        delete_from_nsw_index,
+        read_nsw_tombstones,
+    )
+    store = tmp_path / "nsw"
+    delete_from_nsw_index(spark, store.as_uri(), [9, 7])
+    assert read_nsw_tombstones(spark, str(store)) == [7, 9]
+    assert read_nsw_tombstones(spark, store.as_uri()) == [7, 9]
+    assert read_nsw_tombstones(spark, (tmp_path / "none").as_uri()) == []
+    base = emb.filter(F.col("embedding").isNotNull())
+    dest = str(tmp_path / "compacted")
+    assert compact_nsw_index(spark, store.as_uri(), base, dest, m=3,
+                             n_buckets=4) == 2
+    assert {7, 9}.isdisjoint(
+        r.src for r in spark.read.parquet(dest).collect())
+
+
 @pytest.mark.slow
 def test_stop_rule_answer_and_bound(spark, emb):
     """NSW_STOP_K early termination (r15): with the 40-node fixture the

@@ -574,8 +574,9 @@ def test_nsw_stored_lookup_prunes_buckets_and_search_is_python_free(
     p = _physical(top)
     # the single-query beam accumulates scored rows driver-side, so the
     # RESULT plan is just the bounded k-row relation — that boundedness
-    # is the assertion
-    assert "ExistingRDD" in p
+    # is the assertion — and it is a local relation: no scan of pickled
+    # driver rows that would start Python workers (session.local_frame)
+    assert "LocalTableScan" in p and "ExistingRDD" not in p
     assert "BatchEvalPython" not in p and "MapInPandas" not in p
     # the per-round plan (what each fused action actually runs, r16):
     # ONE union of the IN-pushdown scoring point-read and the pruned

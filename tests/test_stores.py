@@ -7,6 +7,7 @@ from __future__ import annotations
 import contextlib
 import io
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -80,6 +81,22 @@ def test_no_existing_probe_returns_empty_with_schema(spark, tmp_path):
         assert out_cat.collect() == []
     finally:
         spark.sql("DROP TABLE IF EXISTS t_stores_idx2")
+
+
+@pytest.mark.parametrize("as_uri", [False, True], ids=["plain", "file_uri"])
+def test_probed_read_finds_partitions_under_both_path_forms(
+        spark, tmp_path, as_uri):
+    """A store addressed by a ``file://`` URI serves the same probed rows
+    as its plain path: partition existence is checked through the Hadoop
+    FileSystem, not a driver-local ``os.path`` stat that misses on URIs."""
+    from openai_vector_search_demo_spark.stores import read_probed_partitions
+
+    _write_store(spark, str(tmp_path / "idx_uri"))
+    store = ((tmp_path / "idx_uri").as_uri() if as_uri
+             else str(tmp_path / "idx_uri"))
+    out = read_probed_partitions(spark, store, "bucket", [1, 3, 42])
+    assert sorted(r.id for r in out.collect()) == \
+        [i for i in range(200) if i % 8 in (1, 3)]
 
 
 def test_registration_is_idempotent_and_external(spark, tmp_path):
