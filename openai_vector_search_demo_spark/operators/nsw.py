@@ -24,11 +24,10 @@ per-block top-Ms.  At 100 TB the same build runs per IVF cell first
 (cell-bounds the quadratic, the semdedup posture); the graph THIS
 module stores and serves is format-identical either way.
 
-Search (``beam_search_knn``, v4 semantic since r15): entry is ITSELF
-HIERARCHICAL AND RECURSIVE — ``nsw_hier_plan`` graph-indexes every
-level of the stride stack (⌈√n⌉-node L1, n^(1/4)-node L2, … stored
-under ``_L1``/``_L2``/…) down to the first level smaller than
-``NSW_HIER_FLOOR``, and a query enters by scoring that tiny top
+Search (``beam_search_knn``): entry is HIERARCHICAL AND RECURSIVE —
+``nsw_hier_plan`` graph-indexes every level of the stride stack
+(⌈√n⌉-node L1, n^(1/4)-node L2, …) down to the first level smaller
+than ``NSW_HIER_FLOOR``, and a query enters by scoring that tiny top
 subset exactly, then DESCENDING: per level, two beam rounds at
 constant width ``NSW_HIER_W``, re-seeded from the running pool's top;
 the base beam starts from the pool's top-16 (all hierarchy-visited
@@ -36,25 +35,37 @@ stay candidates — their exact scores are paid).  This is the
 reference's actual HNSW multi-layer structure
 (modules/utilities.py:272-278): entry work is
 depth·2·{NSW_HIER_W}·2M evaluations with depth = Θ(log log n) — flat
-in n for any real corpus.  Each of T base rounds joins the frontier's
+in n for any real corpus.  Which levels get a graph and which stride
+product is the flat top is decided in ONE place,
+``_level_geometry(strides, counts)``; every writer, reader and engine
+takes its levels from it.  Each of T base rounds joins the frontier's
 adjacency rows (a broadcast of ≤ ef ids against the src-bucketed edge
 store — partition-pruned point lookups), traverses them SYMMETRICALLY
 (out-edges ∪ reversed in-edges — the reverse-link practice; hubs
 become entryways, not one-way sinks), scores the unvisited newcomers
 by exact cosine against the query, keeps the top-ef as the next
-frontier (ef = {NSW_EF_SERVE} CONSTANT — v4's one-line scale law:
-per-query work is BOUNDED by rounds·ef·2M evaluations independent of
-corpus size, where v3's ⌈1.5·√n⌉ autoscale made it Θ(√n·M) and its
-recall still decayed 0.97 → 0.77 → 0.62 across 2k/20k/100k), and
-accumulates every scored node.  The answer is the top-k of all
-visited nodes — i.e. the refine is built in: scores are exact cosines
-throughout, the graph only decides WHICH nodes get scored.  Recall is
-measured, never assumed — the v4 point (with M = 16, the degree that
-keeps an exact-kNN graph navigable at 100k; M = 6 needed 2× the beam
-for less recall) serves mean/min recall@10 = 1.00/1.00 @ 2k,
-1.00/1.00 @ 20k, 0.98/0.90 @ 100k at the SAME ef
-(``ann_nsw_mean_recall_at_10``, ``ann_nsw_fixed_ef_scaling``,
-``scripts/ab_nsw_v4_deep.py``).
+frontier (ef = {NSW_EF_SERVE} CONSTANT: per-query work is BOUNDED by
+rounds·ef·2M evaluations independent of corpus size, where a
+⌈1.5·√n⌉ autoscale made it Θ(√n·M) and its recall still decayed
+0.97 → 0.77 → 0.62 across 2k/20k/100k), and accumulates every scored
+node.  The answer is the top-k of all visited nodes — i.e. the refine
+is built in: scores are exact cosines throughout, the graph only
+decides WHICH nodes get scored.  Recall is measured, never assumed —
+with M = 16 (the degree that keeps an exact-kNN graph navigable at
+100k; M = 6 needed 2× the beam for less recall) the constant-ef point
+serves mean/min recall@10 = 1.00/1.00 @ 2k, 1.00/1.00 @ 20k,
+0.98/0.90 @ 100k (``ann_nsw_mean_recall_at_10``,
+``ann_nsw_fixed_ef_scaling``, ``scripts/ab_nsw_v4_deep.py``).
+
+Store format (``write_nsw_index``): the base graph and every graph
+level (``_L1`` … ``_Ld``) are stored in one DUAL layout — each directed
+top-M edge under its src bucket with ``fwd = true`` plus a ``fwd =
+false`` mirror under the dst's bucket — and ``_L1_META`` freezes the
+write-time geometry (``strides``, ``counts``, ``stride``, ``n1``,
+``m``, ``n``).  ``_stored_layer`` opens any layer for the single-query
+engine (bucket-pruned lookups); ``resolve_stored_edges`` resolves any
+layer whole (merge-on-read top-M, then symmetrized) for the batch
+engine.
 
 Determinism contract (the ANN-family rule, ``ann.py`` module
 docstring): every selection — per-block top-M, global top-M, per-round
@@ -94,7 +105,6 @@ NSW_EF_SERVE = 160  # CONSTANT serving beam width — independent of n (v4)
 NSW_ROUNDS = 8     # frontier expansions (pinned; the oracle unrolls them)
 NSW_ENTRY_COUNT = 16  # base-beam entry points taken from the level stack
 NSW_HIER_W = 16    # per-level beam width AND seed count (constant in n)
-NSW_SEED_COUNT = NSW_HIER_W  # back-compat alias (pre-v4 name)
 NSW_L1_ROUNDS = 2     # beam rounds per graph-indexed hierarchy level
 NSW_HIER_FLOOR = 16   # level size below this -> score the level flat
 NSW_STOP_K = 32
@@ -193,6 +203,29 @@ def nsw_hier_plan(df: DataFrame, n: int,
         cur = cnt
 
 
+def _level_geometry(strides: Sequence[int], counts: Sequence[int]
+                    ) -> tuple[list[int], int]:
+    """(stride products of the graph levels L1 → Ld, flat-top modulus)
+    of a level stack — ``nsw_hier_plan``'s output or a store's frozen
+    ``_L1_META``.  Level ℓ is the subset ``id % (s1·…·sℓ) == 0``; it
+    gets a graph while it holds ≥ {NSW_HIER_FLOOR} nodes, and the first
+    smaller level is the flat-scanned entry top, whose stride product
+    is the modulus.  The one place this walk is made."""
+    prods: list[int] = []
+    prod = 1
+    for s, cnt in zip(strides, counts):
+        prod *= int(s)
+        if cnt < NSW_HIER_FLOOR:
+            break
+        prods.append(prod)
+    return prods, prod
+
+
+def _level_path(path: str, lvl: int) -> str:
+    """Directory of stored graph level ``lvl`` (1-based) under ``path``."""
+    return f"{path.rstrip('/')}/_L{lvl}"
+
+
 def nsw_filtered_ef(ef: int, n_match: int, n_total: int,
                     k: int = 10, cap: int = 4) -> int:
     """PREDICATE-AWARE beam widening for post-filter serving (the
@@ -224,6 +257,50 @@ def symmetrize_edges(edges: DataFrame) -> DataFrame:
                                 F.col("src").alias("dst"))).distinct()
 
 
+def _unit_rows(pdf) -> np.ndarray:
+    """The pandas block's ``v`` vectors as unit rows (a zero vector
+    stays zero)."""
+    mat = np.array(pdf["v"].tolist(), dtype=np.float64)
+    nm = np.linalg.norm(mat, axis=1)
+    nm[nm == 0] = 1.0
+    return mat / nm[:, None]
+
+
+def _rows_topm(rids, cids, sims, m: int) -> list:
+    """(src, dst, sim) rows: each row ``rids[r]``'s top-``m`` columns of
+    ``sims`` under (sim desc, dst asc), itself excluded — the one
+    per-block selection both graph builds use.  Threshold-prefilter
+    before the sort: keep every candidate >= the (m+8)-th largest sim
+    (ties at the boundary INCLUDED, so the exact top-m — at most one
+    self among them — is provably inside), then order just that slice.
+    Same selection as a full-row lexsort, ~10× less Python per row —
+    the lever that cut the 100k exact build from ~9 min to ~2."""
+    out = []
+    slack = min(m + 8, sims.shape[1])
+    for r in range(len(rids)):
+        row = sims[r]
+        if len(row) > slack:
+            thresh = np.partition(row, len(row) - slack)[len(row) - slack]
+            cand = np.nonzero(row >= thresh)[0]
+        else:
+            cand = np.arange(len(row))
+        order = np.lexsort((cids[cand], -row[cand]))
+        picked = [c for c in cand[order] if cids[c] != rids[r]][:m]
+        for c in picked:
+            out.append((rids[r], cids[c], row[c]))
+    return out
+
+
+def _edge_frame(rows):
+    """``_rows_topm`` rows as the builds' (src, dst, sim) pandas frame."""
+    import pandas as pd
+    if not rows:
+        return pd.DataFrame({"src": pd.Series([], dtype="int64"),
+                             "dst": pd.Series([], dtype="int64"),
+                             "sim": pd.Series([], dtype="float64")})
+    return pd.DataFrame(rows, columns=["src", "dst", "sim"])
+
+
 def build_knn_graph(df: DataFrame, m: int = NSW_M,
                     vec_col: str = "embedding", id_col: str = "vec_id",
                     max_block_rows: int = DEFAULT_MAX_BLOCK_ROWS
@@ -234,59 +311,24 @@ def build_knn_graph(df: DataFrame, m: int = NSW_M,
     max_block_rows²·8 B, and each task emits only its left rows'
     per-block top-m — the global window then sees ≤ S·m rows per src,
     never the n² pair relation."""
-    import pandas as pd
-
     base = (df.filter(F.col(vec_col).isNotNull())
             .select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")))
     n = base.count()
     s = max(1, -(-n // max_block_rows))
 
     def block_topm(key, pdf):
-        empty = pd.DataFrame({"src": pd.Series([], dtype="int64"),
-                              "dst": pd.Series([], dtype="int64"),
-                              "sim": pd.Series([], dtype="float64")})
         i, j = key
         a = pdf[pdf["salt"] == i]
         b = pdf[pdf["salt"] == j] if i != j else a
         if len(a) == 0 or len(b) == 0:
-            return empty
+            return _edge_frame([])
         ids_a = a["id"].to_numpy(dtype=np.int64)
         ids_b = b["id"].to_numpy(dtype=np.int64)
-        mat_a = np.array(a["v"].tolist(), dtype=np.float64)
-        mat_b = np.array(b["v"].tolist(), dtype=np.float64)
-        na = np.linalg.norm(mat_a, axis=1)
-        na[na == 0] = 1.0
-        nb = np.linalg.norm(mat_b, axis=1)
-        nb[nb == 0] = 1.0
-        sims = np.round((mat_a / na[:, None]) @ (mat_b / nb[:, None]).T, 6)
-        out = []
-        for side, (rids, cids, sm) in enumerate(
-                [(ids_a, ids_b, sims)] if i == j
-                else [(ids_a, ids_b, sims), (ids_b, ids_a, sims.T)]):
-            # threshold-prefilter before the (sim desc, dst asc) sort:
-            # keep every candidate >= the (m+8)-th largest sim (ties at
-            # the boundary INCLUDED, so the exact top-m — at most one
-            # self among them — is provably inside), then order just
-            # that slice.  Same selection as a full-row lexsort, ~10×
-            # less Python per row — the lever that cut the 100k exact
-            # build from ~9 min to ~2 (r15).
-            slack = min(m + 8, sm.shape[1])
-            for r in range(len(rids)):
-                row = sm[r]
-                if len(row) > slack:
-                    thresh = np.partition(row, len(row) - slack)[
-                        len(row) - slack]
-                    cand = np.nonzero(row >= thresh)[0]
-                else:
-                    cand = np.arange(len(row))
-                order = np.lexsort((cids[cand], -row[cand]))
-                picked = [c for c in cand[order]
-                          if cids[c] != rids[r]][:m]
-                for c in picked:
-                    out.append((rids[r], cids[c], row[c]))
-        if not out:
-            return empty
-        return pd.DataFrame(out, columns=["src", "dst", "sim"])
+        sims = np.round(_unit_rows(a) @ _unit_rows(b).T, 6)
+        out = _rows_topm(ids_a, ids_b, sims, m)
+        if i != j:
+            out += _rows_topm(ids_b, ids_a, sims.T, m)
+        return _edge_frame(out)
 
     salted = base.withColumn(
         "salt", F.pmod(F.xxhash64("id"), F.lit(s)).cast("int"))
@@ -358,27 +400,11 @@ def build_knn_graph_sharded(df: DataFrame, centroids,
         assign, schema="id long, v array<double>, sup int")
 
     def cell_topm(key, pdf):
-        import pandas as pd
-        empty = pd.DataFrame({"src": pd.Series([], dtype="int64"),
-                              "dst": pd.Series([], dtype="int64"),
-                              "sim": pd.Series([], dtype="float64")})
         if len(pdf) < 2:
-            return empty
+            return _edge_frame([])
         ids = pdf["id"].to_numpy(dtype=np.int64)
-        mat = np.array(pdf["v"].tolist(), dtype=np.float64)
-        nm = np.linalg.norm(mat, axis=1)
-        nm[nm == 0] = 1.0
-        u = mat / nm[:, None]
-        sims = np.round(u @ u.T, 6)
-        out = []
-        for r in range(len(ids)):
-            row = sims[r]
-            order = np.lexsort((ids, -row))
-            picked = [c for c in order if ids[c] != ids[r]][:m]
-            for c in picked:
-                out.append((int(ids[r]), int(ids[c]), float(row[c])))
-        return pd.DataFrame(out, columns=["src", "dst", "sim"]) \
-            if out else empty
+        u = _unit_rows(pdf)
+        return _edge_frame(_rows_topm(ids, ids, np.round(u @ u.T, 6), m))
 
     cands = (exploded.groupBy("sup")
              .applyInPandas(cell_topm,
@@ -399,23 +425,21 @@ def write_nsw_index(df: DataFrame, path: str, m: int = NSW_M,
     buckets — the vectors themselves are NOT stored here (the refine
     point-reads them from the source table).
 
-    v2 (r13): each directed top-M edge is written in BOTH directions —
-    the out-edge with ``fwd = true`` (the canonical list the
-    merge-on-read top-M window resolves) and its mirror under the
-    OTHER endpoint's bucket with ``fwd = false`` — so symmetric
-    traversal stays a single src-pruned point read per round instead
-    of an unprunable dst-side scan.  Mirror rows are traversal HINTS:
-    the stored lookup validates each against the mirror source's
-    current resolved top-M (one extra pruned point read), which makes
-    them exact under upserts too.
+    Each directed top-M edge is written in BOTH directions — the
+    out-edge with ``fwd = true`` (the canonical list the merge-on-read
+    top-M window resolves) and its mirror under the OTHER endpoint's
+    bucket with ``fwd = false`` — so symmetric traversal stays a single
+    src-pruned point read per round instead of an unprunable dst-side
+    scan.  Mirror rows are traversal HINTS: the stored lookup validates
+    each against the mirror source's current resolved top-M, which
+    makes them exact under upserts too.
 
-    v4 (r15): the store carries the WHOLE hierarchy — every level of
-    ``nsw_hier_plan`` with ≥ {NSW_HIER_FLOOR} nodes gets its own exact
-    top-M graph under ``_L1``, ``_L2``, … (each in the SAME dual
-    fwd/mirror bucketed format as the base layer, so the incremental
-    upsert machinery applies to levels too — VERDICT r14 #2), and the
-    write-time geometry lands in ``_L1_META`` (strides + counts +
-    legacy v3 keys).  Level ℓ is n^(1/2^ℓ)-sized: its build is at most
+    The store carries the WHOLE hierarchy: every graph level of
+    ``nsw_hier_plan`` (``_level_geometry``) gets its own exact top-M
+    graph under ``_L1``, ``_L2``, … in the SAME dual fwd/mirror
+    bucketed format as the base layer, so the incremental upsert
+    machinery applies to levels too, and the write-time geometry lands
+    in ``_L1_META``.  Level ℓ is n^(1/2^ℓ)-sized: its build is at most
     n work (amortized next to the base n²-bounded build), depth is
     Θ(log log n), and serving entry costs depth·{NSW_L1_ROUNDS}·
     {NSW_HIER_W}·2M evaluations — flat in n."""
@@ -423,27 +447,27 @@ def write_nsw_index(df: DataFrame, path: str, m: int = NSW_M,
     n = base.count()
     strides, counts = nsw_hier_plan(base, n, id_col=id_col)
     edges = build_knn_graph(df, m=m, vec_col=vec_col, id_col=id_col)
-    _write_graph_dual(edges, path, n_buckets)
-    prod = 1
-    for lvl, (s, cnt) in enumerate(zip(strides, counts), start=1):
-        prod *= s
-        if cnt < NSW_HIER_FLOOR:
-            break       # this subset is the flat-scanned entry top
-        sub = base.filter(F.pmod(F.col(id_col), F.lit(int(prod))) == 0)
+    _write_graph_dual(edges, path, n_buckets, "overwrite")
+    for lvl, prod in enumerate(_level_geometry(strides, counts)[0],
+                               start=1):
+        sub = base.filter(F.pmod(F.col(id_col), F.lit(prod)) == 0)
         ledges = build_knn_graph(sub, m=m, vec_col=vec_col,
                                  id_col=id_col)
-        _write_graph_dual(ledges, f"{path.rstrip('/')}/_L{lvl}",
-                          n_buckets)
-    _write_hier_meta(df.sparkSession, path, strides, counts, m, n=n)
+        _write_graph_dual(ledges, _level_path(path, lvl), n_buckets,
+                          "overwrite")
+    _write_hier_meta(df.sparkSession, path, strides, counts, m, n)
 
 
-def _write_graph_dual(edges: DataFrame, path: str,
-                      n_buckets: int) -> None:
-    """Persist a directed top-M adjacency in the store's DUAL format:
-    every edge under its src bucket with ``fwd = true`` (the canonical
-    list merge-on-read resolves) plus a ``fwd = false`` mirror under
-    the dst's bucket (symmetric traversal stays a src-pruned point
-    read) — see the v2 notes above."""
+def _write_graph_dual(edges: DataFrame, path: str, n_buckets: int,
+                      mode: str) -> None:
+    """Persist (``mode`` "overwrite") or append (``mode`` "append") a
+    directed top-M adjacency in the store's DUAL format: every edge
+    under its src bucket with ``fwd = true`` (the canonical list
+    merge-on-read resolves) plus a ``fwd = false`` mirror under the
+    dst's bucket (symmetric traversal stays a src-pruned point read).
+    Appended mirrors whose canonical edge is later displaced become
+    stale HINTS, which the stored lookup's validation filters against
+    the live top-m."""
     both = (edges.withColumn("fwd", F.lit(True))
             .unionByName(edges.select(F.col("dst").alias("src"),
                                       F.col("src").alias("dst"), "sim")
@@ -451,30 +475,25 @@ def _write_graph_dual(edges: DataFrame, path: str,
     (both.withColumn("bucket", F.pmod(F.col("src"), F.lit(n_buckets))
                      .cast("int"))
      .repartition(F.col("bucket"))
-     .write.mode("overwrite").partitionBy("bucket").parquet(path))
+     .write.mode(mode).partitionBy("bucket").parquet(path))
 
 
 def _write_hier_meta(spark, path: str, strides: list[int],
-                     counts: list[int], m: int,
-                     n: int | None = None) -> None:
-    """``_L1_META``: the frozen write-time geometry (v4 adds the full
-    ``strides``/``counts`` stack; the v3 scalar keys stay for
-    compatibility with pre-v4 readers and tests; r16 adds the corpus
-    size ``n`` so serving slots can derive their stride from the store
-    artifact instead of a per-run count job)."""
+                     counts: list[int], m: int, n: int) -> None:
+    """``_L1_META``: the frozen write-time geometry — the level stack's
+    ``strides``/``counts`` (``_level_geometry`` input), the base stride
+    and L1 size as ``stride``/``n1``, the degree ``m`` and the corpus
+    size ``n``, so serving derives its stride from the store artifact
+    instead of a per-run count job."""
     import json
 
     from openai_vector_search_demo_spark.stores import fs_write_text
-    legacy_stride2 = strides[1] if len(strides) > 1 else \
-        nsw_l1_params(counts[0])[0]
     meta = {"stride": int(strides[0]),
             "n1": int(counts[0]),
-            "stride2": int(legacy_stride2),
             "m": int(m),
             "strides": [int(s) for s in strides],
-            "counts": [int(c) for c in counts]}
-    if n is not None:
-        meta["n"] = int(n)
+            "counts": [int(c) for c in counts],
+            "n": int(n)}
     fs_write_text(spark, path.rstrip("/") + "/_L1_META",
                   json.dumps(meta))
 
@@ -562,25 +581,26 @@ class AdjRelation:
     top-``m`` over distinct fwd pairs, plus mirror rows validated
     against the mirrored node's own top-m — fed by the SAME prefetched
     rows, so r15's separate per-round validation read disappears.
-    ``pred_rel`` (optional) is the predicate form — used once per serve
-    to prefetch the flat-top entry's adjacency inside the entry scan's
+    ``pred_rel(pred)`` is the predicate form — used once per serve to
+    prefetch the flat-top entry's adjacency inside the entry scan's
     own job; it is only ever called on the DEEPEST hierarchy level,
     whose node count is < NSW_HIER_FLOOR² by construction, so the
     unpruned scan it implies reads < 256 nodes at ANY corpus size."""
 
-    def __init__(self, rel, trusted: bool = True, m: int = NSW_M,
-                 pred_rel=None):
+    def __init__(self, rel, pred_rel, trusted: bool = True,
+                 m: int = NSW_M):
         self.rel = rel
+        self.pred_rel = pred_rel
         self.trusted = trusted
         self.m = m
-        self.pred_rel = pred_rel
 
 
 def _dsc(s):
     """Spark's (sim DESC NULLS LAST, NaN largest) as an ascending key —
     stored sims are 6-dp-rounded doubles written by the build/upsert,
     so sorting THEM driver-side replays the merge-on-read window's
-    order bit-for-bit (no recomputation)."""
+    order bit-for-bit (no recomputation); the single-query engine
+    orders its scored rows by the same key."""
     if s is None:
         return (2, 0.0)
     if s != s:          # NaN sorts above every number under DESC
@@ -607,7 +627,6 @@ def beam_search_knn(edges, source: DataFrame,
                     exclude_ids: Sequence[int] | None = None,
                     stride: int | None = None,
                     n_entry: int = NSW_ENTRY_COUNT,
-                    l1_edges=None, n1: int | None = None,
                     hier_levels: Sequence | None = None,
                     flat_mod: int | None = None,
                     stop_k: int | None = NSW_STOP_K) -> DataFrame:
@@ -627,26 +646,25 @@ def beam_search_knn(edges, source: DataFrame,
     same total order Spark's orderBy gives — so the trajectory is
     oracle-replayable bit-for-bit and identical to the r15 shapes.
 
-    Entry points (v4, HIERARCHICAL): with ``hier_levels``/``flat_mod``
-    set — or the legacy depth-1 shape ``stride``+``l1_edges``+``n1``
-    (upgraded internally) — entry DESCENDS the level stack: the flat
-    top subset ``id % flat_mod == 0`` (< {NSW_HIER_FLOOR} nodes) is
-    scored exactly — with the deepest level's adjacency prefetched in
-    the SAME action when the level exposes ``pred_rel`` — then each
-    graph level from the top down runs {NSW_L1_ROUNDS} fused rounds at
+    Entry points (HIERARCHICAL): with ``hier_levels`` non-empty and
+    ``flat_mod`` set (both from ``_level_geometry``), entry DESCENDS the
+    level stack: the flat top subset ``id % flat_mod == 0``
+    (< {NSW_HIER_FLOOR} nodes) is scored exactly — with the deepest
+    level's adjacency prefetched in the SAME action — then each graph
+    level from the top down runs {NSW_L1_ROUNDS} fused rounds at
     CONSTANT width {NSW_HIER_W}, and the top-``n_entry`` of everything
     visited seeds the base beam.  A level TRANSITION pays one
     frontier-sized catch-up read (the new level's adjacency was never
     prefetched); everything else is one action per round.  With only
     ``stride`` set, the whole coarse layer is scored flat (the
-    registered degeneration when ``n1 < NSW_HIER_FLOOR``).  Without
-    ``stride``, ``seeds`` are used verbatim — their known ids let the
-    seed scoring and seed adjacency ride one action too.
+    degeneration when no level reaches {NSW_HIER_FLOOR} nodes).
+    Without ``stride``, ``seeds`` are used verbatim — their known ids
+    let the seed scoring and seed adjacency ride one action too.
 
     ``edges`` / level entries are ``AdjRelation``s (the stored path's
-    bucket-pruned form), DataFrames of (src, dst), or legacy
-    ``ids -> DataFrame`` callables; ``hier_levels`` is ordered L1 → Ld
-    (the descent runs it reversed)."""
+    bucket-pruned form, ``_stored_layer``) or DataFrames of (src, dst);
+    ``hier_levels`` is ordered L1 → Ld (the descent runs it
+    reversed)."""
     from pyspark.sql import Row
 
     q = vector_lit(qvec)
@@ -657,20 +675,12 @@ def beam_search_knn(edges, source: DataFrame,
     def _as_adj(e):
         if isinstance(e, AdjRelation):
             return e
-        if callable(e):
-            return AdjRelation(e)
         return AdjRelation(
             lambda ids, _e=e: _e.filter(F.col("src").isin(ids)),
-            pred_rel=lambda pred, _e=e: _e.filter(pred))
+            lambda pred, _e=e: _e.filter(pred))
 
     def skey(r):
-        s = r["_s"]
-        # Spark orderBy(desc): NaN above every number, NULLs last
-        if s is None:
-            return (2, 0.0, r[id_col])
-        if s != s:
-            return (0, 0.0, r[id_col])
-        return (1, -s, r[id_col])
+        return _dsc(r["_s"]), r[id_col]
 
     def score_pred(pred) -> DataFrame:
         return (source.filter(F.col(vec_col).isNotNull() & pred)
@@ -800,12 +810,6 @@ def beam_search_knn(edges, source: DataFrame,
                 new[i] = RowF(i, r["_lbl"], r["_s"])
         return new
 
-    if (hier_levels is None and stride is not None
-            and l1_edges is not None and n1 is not None
-            and n1 >= NSW_HIER_FLOOR):
-        # legacy depth-1 call shape -> the v4 descent with one level
-        hier_levels = [l1_edges]
-        flat_mod = int(stride) * nsw_l1_params(n1)[0]
     base_adj = _as_adj(edges)
     if hier_levels:
         adjs = [_as_adj(lv) for lv in hier_levels]
@@ -813,13 +817,12 @@ def beam_search_knn(edges, source: DataFrame,
         scored0 = score_pred(
             F.pmod(F.col(id_col), F.lit(int(flat_mod))) == 0)
         schema = scored0.schema
-        branches = [_sb(scored0)]
-        if deep.pred_rel is not None:
-            # the flat top is a subset of the deepest graph level, so
-            # its first-descent adjacency rides the entry scan's action
-            branches.append(_ab(deep.pred_rel(
-                F.pmod(F.col("src"), F.lit(int(flat_mod))) == 0)))
-        scored, adjrows = _collect(branches)
+        # the flat top is a subset of the deepest graph level, so its
+        # first-descent adjacency rides the entry scan's action
+        scored, adjrows = _collect([
+            _sb(scored0),
+            _ab(deep.pred_rel(
+                F.pmod(F.col("src"), F.lit(int(flat_mod))) == 0))])
         _ingest(_cache(deep), [r["_a"] for r in scored],
                 adjrows.get(1, []))
         visited = {r["_a"]: RowF(r["_a"], r["_lbl"], r["_s"])
@@ -914,8 +917,6 @@ def beam_search_knn_batch(edges: DataFrame, source: DataFrame,
                           sim_col: str = "similarity",
                           stride: int | None = None,
                           n_entry: int = NSW_ENTRY_COUNT,
-                          l1_edges: DataFrame | None = None,
-                          n1: int | None = None,
                           hier_levels: Sequence[DataFrame] | None = None,
                           flat_mod: int | None = None,
                           stop_k: int | None = NSW_STOP_K) -> DataFrame:
@@ -945,14 +946,8 @@ def beam_search_knn_batch(edges: DataFrame, source: DataFrame,
     sess = source.sparkSession
     wf = Window.partitionBy("qid").orderBy(F.col("_s").desc(),
                                            F.col(id_col).asc())
-    if (hier_levels is None and stride is not None
-            and l1_edges is not None and n1 is not None
-            and n1 >= NSW_HIER_FLOOR):
-        # legacy depth-1 call shape -> the v4 descent with one level
-        hier_levels = [l1_edges]
-        flat_mod = int(stride) * nsw_l1_params(n1)[0]
     if hier_levels:
-        # HIERARCHICAL entry (v4): every qid scores the shared flat top
+        # HIERARCHICAL entry: every qid scores the shared flat top
         # subset (< NSW_HIER_FLOOR rows), then DESCENDS the level stack
         # — per level, NSW_L1_ROUNDS qid-keyed beam rounds at constant
         # width NSW_HIER_W over that level's edge relation (re-seeded
@@ -984,8 +979,8 @@ def beam_search_knn_batch(edges: DataFrame, source: DataFrame,
                     .filter(F.col("_rn") <= n_entry)
                     .select("qid", F.col(id_col).alias("src")))
     elif stride is not None:
-        # flat coarse entry (the r13 semantic, kept as the registered
-        # degeneration for n1 < NSW_HIER_FLOOR): every qid scores the
+        # flat coarse entry (the degeneration when no level reaches
+        # NSW_HIER_FLOOR nodes): every qid scores the
         # whole ⌈n/stride⌉-row coarse layer, keeps all of it as
         # visited, and enters the graph at its per-qid top-n_entry.
         seed_df = (q.select("qid").crossJoin(
@@ -1063,7 +1058,7 @@ def nsw_knn(df: DataFrame, qvec: Sequence[float], k: int = 10,
     graph once via ``write_nsw_index`` and serves many queries).
     Traversal is SYMMETRIC over the directed top-m build; with
     ``stride`` set the whole level stack is graph-indexed inline too
-    and entry is the v4 HIERARCHICAL descent (``n1`` skips the first
+    and entry is the HIERARCHICAL descent (``n1`` skips the first
     coarse count job when the caller already knows it).
 
     The built adjacency is ``localCheckpoint``-ed ONCE per call (r16,
@@ -1077,38 +1072,23 @@ def nsw_knn(df: DataFrame, qvec: Sequence[float], k: int = 10,
     edges = symmetrize_edges(
         build_knn_graph(df, m=m, vec_col=vec_col, id_col=id_col)
     ).localCheckpoint()
-    levels, flat_mod = None, None
+    levels, flat_mod = [], None
     if stride is not None:
-        import math
         base = df.filter(F.col(vec_col).isNotNull())
         n = base.count()
-        if int(stride) != max(2, math.ceil(math.sqrt(max(1, n)))):
-            # Non-√n coarse geometry: the hierarchy recursion is defined
-            # on the √-stack only, and the caller's n1 counts the
-            # caller-stride subset, not the √-subset — building levels
-            # here would index geometry the caller never asked for.
-            # Serve the flat coarse entry at the caller's stride instead
-            # (the same fallback nsw_stored_knn takes on a stored-meta
-            # stride mismatch, keeping the two paths equal).
-            return beam_search_knn(edges, df, qvec, k=k, ef=ef,
-                                   rounds=rounds, seeds=seeds,
-                                   vec_col=vec_col, id_col=id_col,
-                                   sim_col=sim_col, stride=stride,
-                                   n_entry=n_entry, stop_k=stop_k)
-        strides, counts = nsw_hier_plan(base, n, id_col=id_col, n1=n1)
-        levels, prod = [], 1
-        for s, cnt in zip(strides, counts):
-            prod *= s
-            if cnt < NSW_HIER_FLOOR:
-                break
-            levels.append(build_l1_graph(base, prod, m=m,
-                                         vec_col=vec_col,
-                                         id_col=id_col)
-                          .localCheckpoint())
-        flat_mod = prod
-        if not levels:
-            # degenerate corpus: flat coarse entry at the caller stride
-            levels, flat_mod = None, None
+        # A non-√n coarse stride keeps the flat coarse entry at the
+        # caller's stride: the hierarchy recursion is defined on the
+        # √-stack only, and the caller's n1 counts the caller-stride
+        # subset, not the √-subset — building levels here would index
+        # geometry the caller never asked for (nsw_stored_knn takes the
+        # same fallback on a stored-meta stride mismatch, keeping the
+        # two paths equal).
+        if int(stride) == nsw_serving_params(n)[0]:
+            prods, flat_mod = _level_geometry(
+                *nsw_hier_plan(base, n, id_col=id_col, n1=n1))
+            levels = [build_l1_graph(base, prod, m=m, vec_col=vec_col,
+                                     id_col=id_col).localCheckpoint()
+                      for prod in prods]
     return beam_search_knn(edges, df, qvec, k=k, ef=ef, rounds=rounds,
                            seeds=seeds, vec_col=vec_col, id_col=id_col,
                            sim_col=sim_col, stride=stride,
@@ -1140,17 +1120,17 @@ def upsert_nsw_index(spark, path: str, batch: DataFrame,
     documented production answer is periodic recompaction, the IVFADC
     pattern).
 
-    v4 (r15, VERDICT r14 #2): the HIERARCHY is maintained incrementally
-    too — each stored level is just another NSW graph in the same dual
-    format, so the level's batch members (|B|/s1·…·sℓ of the batch) get
-    the SAME exact append (new-node lists + beats-the-m-th-edge
-    improvements, merge-on-read resolved).  A level is rebuilt whole
-    ONLY when its geometry moves: the post-upsert ``nsw_hier_plan`` is
-    compared stride-product by stride-product against the stored meta,
-    and ⌈√n⌉ changes once per ~2√n inserts, so the rebuild (≤ n work,
-    on an n^(1/2^ℓ)-sized layer) amortizes to O(√n) per insert — the
-    upsert path's steady-state work term is |batch|-proportional, not
-    the Θ(n) whole-L1 rebuild v3 paid per batch."""
+    The HIERARCHY is maintained incrementally too — each stored level
+    is just another NSW graph in the same dual format, so the level's
+    batch members (|B|/s1·…·sℓ of the batch) get the SAME exact append
+    (new-node lists + beats-the-m-th-edge improvements, merge-on-read
+    resolved).  A level is rebuilt whole ONLY when its geometry moves:
+    the post-upsert graph-level stride products (``_level_geometry``)
+    are compared with the stored meta's, and ⌈√n⌉ changes once per
+    ~2√n inserts, so the rebuild (≤ n work, on an n^(1/2^ℓ)-sized
+    layer) amortizes to O(√n) per insert — the upsert path's
+    steady-state work term is |batch|-proportional, not a Θ(n)
+    whole-L1 rebuild per batch."""
     ex = (existing.filter(F.col(vec_col).isNotNull())
           .select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")))
     brows = (batch.filter(F.col(vec_col).isNotNull())
@@ -1173,41 +1153,29 @@ def upsert_nsw_index(spark, path: str, batch: DataFrame,
     # corpus (deterministic — an at-least-once replay sees the same
     # corpus and produces the same bytes), append incrementally where
     # the frozen geometry still matches, rebuild a level only where its
-    # stride product moved (or it newly crossed the floor)
+    # stride product or a shallower level's moved, or it newly crossed
+    # the floor
     allnodes = ex.unionByName(bdf)
     n = allnodes.count()
-    meta = read_l1_meta(spark, path) or {}
-    old_strides = meta.get("strides", [])
-    old_counts = meta.get("counts", [])
+    meta = read_l1_meta(spark, path)
+    old_prods = _level_geometry(meta["strides"], meta["counts"])[0]
     strides, counts = nsw_hier_plan(allnodes, n, id_col="id")
-    prod, old_prod = 1, 1
-    geom_ok = True
-    for lvl, (s, cnt) in enumerate(zip(strides, counts), start=1):
-        prod *= s
-        if lvl <= len(old_strides):
-            old_prod *= old_strides[lvl - 1]
-        geom_ok = (geom_ok and lvl <= len(old_strides)
-                   and old_prod == prod
-                   and lvl <= len(old_counts)
-                   and old_counts[lvl - 1] >= NSW_HIER_FLOOR)
-        if cnt < NSW_HIER_FLOOR:
-            break       # flat top — no graph at this level
-        lpath = f"{path.rstrip('/')}/_L{lvl}"
-        if geom_ok:
+    prods = _level_geometry(strides, counts)[0]
+    for lvl, prod in enumerate(prods, start=1):
+        lpath = _level_path(path, lvl)
+        if old_prods[:lvl] == prods[:lvl]:
             bsub = [r for r in brows if int(r.id) % prod == 0]
             if bsub:
                 _append_graph_delta(
                     spark, lpath, bsub,
-                    ex.filter(F.pmod(F.col("id"), F.lit(int(prod)))
-                              == 0),
+                    ex.filter(F.pmod(F.col("id"), F.lit(prod)) == 0),
                     m, n_buckets)
         else:
-            sub = allnodes.filter(
-                F.pmod(F.col("id"), F.lit(int(prod))) == 0)
+            sub = allnodes.filter(F.pmod(F.col("id"), F.lit(prod)) == 0)
             _write_graph_dual(
                 build_knn_graph(sub, m=m, vec_col="v", id_col="id"),
-                lpath, n_buckets)
-    _write_hier_meta(spark, path, strides, counts, m, n=n)
+                lpath, n_buckets, "overwrite")
+    _write_hier_meta(spark, path, strides, counts, m, n)
 
 
 def _batch_frame(spark, brows) -> DataFrame:
@@ -1339,19 +1307,8 @@ def _append_graph_delta(spark, path: str, brows, existing: DataFrame,
                                & (F.col("dst") < F.col("wdst"))))
                     .select("src", "dst", "sim"))
 
-    out = new_edges.unionByName(improvements)
-    # v2: every appended out-edge also lands as a fwd=false mirror under
-    # the other endpoint's bucket (see write_nsw_index) — mirrors whose
-    # canonical edge is later displaced become stale HINTS, which the
-    # stored lookup's validation pass filters against the live top-m.
-    both = (out.withColumn("fwd", F.lit(True))
-            .unionByName(out.select(F.col("dst").alias("src"),
-                                    F.col("src").alias("dst"), "sim")
-                         .withColumn("fwd", F.lit(False))))
-    (both.withColumn("bucket", F.pmod(F.col("src"), F.lit(n_buckets))
-                     .cast("int"))
-     .repartition(F.col("bucket"))
-     .write.mode("append").partitionBy("bucket").parquet(path))
+    _write_graph_dual(new_edges.unionByName(improvements), path,
+                      n_buckets, "append")
 
 
 def delete_from_nsw_index(spark, path: str, ids: Sequence[int]) -> None:
@@ -1399,17 +1356,18 @@ def compact_nsw_index(spark, path: str, source: DataFrame, dest: str,
 
 
 def resolve_stored_edges(spark, path: str, m: int = NSW_M) -> DataFrame:
-    """The store's CURRENT undirected traversal relation, resolved
-    globally: merge-on-read top-``m`` window over the fwd rows (exact
-    adjacency after any ``upsert_nsw_index`` appends), then
-    symmetrized.  The BATCH serving form uses this — one resolve
-    amortized over thousands of queries per job; the single-query path
-    (``nsw_stored_knn``) instead resolves frontier-locally per round
-    and never touches the whole store."""
+    """A stored layer's CURRENT undirected traversal relation (the base
+    store or a ``_L{l}`` level directory), resolved globally — the one
+    merge-on-read resolver: the per-src DENSE_RANK top-``m`` window over
+    the fwd rows (exact adjacency after any ``upsert_nsw_index``
+    appends), then symmetrized.  The BATCH serving form uses this — one
+    resolve amortized over thousands of queries per job; the
+    single-query path (``nsw_stored_knn``) instead resolves
+    frontier-locally per round and never touches the whole store."""
     wm = Window.partitionBy("src").orderBy(F.col("sim").desc(),
                                            F.col("dst").asc())
-    # dense_rank for the same replay-duplicate collapse as the stored
-    # lookup's resolved_fwd; symmetrize_edges' distinct removes the
+    # dense_rank for the same replay-duplicate collapse as the driver
+    # replay ``_topm_from``; symmetrize_edges' distinct removes the
     # repeated (src, dst) rows duplicates leave behind
     fwd = (spark.read.parquet(path).filter(F.col("fwd"))
            .withColumn("_rn", F.dense_rank().over(wm))
@@ -1417,58 +1375,61 @@ def resolve_stored_edges(spark, path: str, m: int = NSW_M) -> DataFrame:
     return symmetrize_edges(fwd)
 
 
-def read_l1_meta(spark, path: str) -> dict | None:
-    """The store's L1-layer metadata (write-time stride/stride2/n1) or
-    None for a pre-v3 store — read through the Hadoop FS API so it is
-    visible on any store URI."""
+def read_l1_meta(spark, path: str) -> dict:
+    """The store's frozen write-time geometry (``_L1_META``, written by
+    ``_write_hier_meta``), read through the Hadoop FS API so it is
+    visible on any store URI.  Every ``write_nsw_index`` store carries
+    it; a path without it is not a complete store and raises."""
     import json
 
     from openai_vector_search_demo_spark.stores import fs_read_text
     txt = fs_read_text(spark, path.rstrip("/") + "/_L1_META")
-    return json.loads(txt) if txt else None
+    if not txt:
+        raise FileNotFoundError(f"{path}: no _L1_META (not a complete "
+                                f"NSW store)")
+    return json.loads(txt)
 
 
-def resolve_stored_l1(spark, path: str):
-    """(l1_edges, meta) — the legacy depth-1 view of
-    ``resolve_stored_levels`` (kept for pre-v4 call sites/tests)."""
-    levels, meta = resolve_stored_levels(spark, path)
-    if meta is None:
-        return None, None
-    return (levels[0] if levels else None), meta
-
-
-def resolve_stored_levels(spark, path: str, m: int = NSW_M):
-    """(levels, meta) for the BATCH serving form: every stored
-    hierarchy level's undirected traversal relation L1 → Ld, each
-    resolved with the merge-on-read top-``m`` window over its fwd rows
-    (exact after ``upsert_nsw_index`` level appends) and symmetrized —
-    one read per level, n^(1/2^ℓ)-sized, amortized over every query in
-    the batch.  ([], meta-or-None) when the store has no graph levels
-    (flat-entry corpora / pre-v3 stores)."""
+def resolve_stored_levels(spark, path: str):
+    """(levels, flat_mod, meta) for the BATCH serving form: every stored
+    graph level's undirected traversal relation L1 → Ld, each resolved
+    by ``resolve_stored_edges`` at the store's degree — one read per
+    level, n^(1/2^ℓ)-sized, amortized over every query in the batch —
+    the flat-top modulus of the store's geometry, and the store's
+    ``_L1_META``.  ``levels`` is empty when no level reaches
+    {NSW_HIER_FLOOR} nodes (the flat-entry corpora)."""
     meta = read_l1_meta(spark, path)
-    if meta is None:
-        return [], None
-    counts = meta.get("counts", [meta["n1"]])
-    levels = []
-    wm = Window.partitionBy("src").orderBy(F.col("sim").desc(),
-                                           F.col("dst").asc())
-    mm = int(meta.get("m", m))
-    for lvl, cnt in enumerate(counts, start=1):
-        if cnt < NSW_HIER_FLOOR:
-            break
-        raw = spark.read.parquet(f"{path.rstrip('/')}/_L{lvl}")
-        if "fwd" not in raw.columns:
-            # pre-v4 store: _L1 was written as an already-symmetrized
-            # (src, dst, sim, bucket) relation with no fwd/mirror split
-            # — its rows ARE the traversal relation (no merge-on-read
-            # window applies: v3 rebuilt the layer whole on upsert)
-            levels.append(raw.select("src", "dst").distinct())
-            continue
-        fwd = (raw.filter(F.col("fwd"))
-               .withColumn("_rn", F.dense_rank().over(wm))
-               .filter(F.col("_rn") <= mm).select("src", "dst"))
-        levels.append(symmetrize_edges(fwd))
-    return levels, meta
+    prods, flat_mod = _level_geometry(meta["strides"], meta["counts"])
+    levels = [resolve_stored_edges(spark, _level_path(path, lvl),
+                                   m=int(meta["m"]))
+              for lvl in range(1, len(prods) + 1)]
+    return levels, flat_mod, meta
+
+
+def _stored_layer(spark, path: str, n_buckets: int, m: int,
+                  has_deltas: bool) -> AdjRelation:
+    """One stored layer (the base store or a ``_L{l}`` level directory)
+    opened for the single-query engine: ``rel(ids)`` reads only the
+    ids' src BUCKET directories (the partition filter is derived from
+    the ids — pruning at discovery time, the stored-LSH pattern) and
+    ``pred_rel(pred)`` the layer's rows under a predicate.  A
+    never-upserted store is trusted: every src has exactly m fwd rows
+    and every mirror is valid, so its (src, dst) rows ARE the
+    undirected adjacency.  With upsert deltas the lookup carries
+    (sim, fwd) for the engine's merge-on-read resolution and mirror
+    validation."""
+    layer = spark.read.parquet(path)
+    cols = ("src", "dst", "sim", "fwd") if has_deltas else ("src", "dst")
+
+    def pred_rel(pred):
+        return layer.filter(pred).select(*cols)
+
+    def rel(ids):
+        buckets = sorted({int(i) % n_buckets for i in ids})
+        return pred_rel(F.col("bucket").isin(buckets)
+                        & F.col("src").isin(ids))
+
+    return AdjRelation(rel, pred_rel, trusted=not has_deltas, m=m)
 
 
 def nsw_stored_knn(spark, path: str, source: DataFrame,
@@ -1493,92 +1454,39 @@ def nsw_stored_knn(spark, path: str, source: DataFrame,
     a no-op on a never-upserted store and the exact full-rebuild list
     after inserts; it is a driver-side selection over the round's
     prefetched rows (``_topm_from``), never a job.  Traversal is
-    SYMMETRIC (v2): the frontier's fwd=false mirror rows contribute
+    SYMMETRIC: the frontier's fwd=false mirror rows contribute
     reversed edges after VALIDATION — each mirror (w←x) is kept only
     if (x→w) survives x's own resolved top-m — resolved from the SAME
-    prefetched rows (r16: r15 paid one extra concurrent read per
-    round for this), so stale mirrors left behind by upsert
-    displacement can never steer the beam off the oracle's graph."""
+    prefetched rows (no extra read per round), so stale mirrors left
+    behind by upsert displacement can never steer the beam off the
+    oracle's graph."""
     from openai_vector_search_demo_spark.stores import fs_exists
 
-    edges = spark.read.parquet(path)
     # Hadoop-FS stat, not os.path: the marker must be visible on ANY
     # store URI (s3a://, hdfs://) or an upserted remote store would
     # silently take the fresh-store fast path and serve a stale graph.
     has_deltas = fs_exists(spark, path.rstrip("/") + "/_DELTAS")
+    lookup = _stored_layer(spark, path, n_buckets, m, has_deltas)
 
-    def _rel(ids):
-        buckets = sorted({int(i) % n_buckets for i in ids})
-        sel = edges.filter(F.col("bucket").isin(buckets)
-                           & F.col("src").isin(ids))
-        if not has_deltas:
-            # never-upserted store (the common serving case): every
-            # src has exactly m fwd rows and every mirror is valid —
-            # the rows ARE the undirected adjacency
-            return sel.select("src", "dst")
-        return sel.select("src", "dst", "sim", "fwd")
-
-    lookup = AdjRelation(_rel, trusted=not has_deltas, m=m)
-
-    # v4 hierarchical entry off the store's own level stack: each
-    # level's lookup prunes its _L{l} bucket directories by the
-    # frontier ids exactly like the base lookup, with the SAME
-    # merge-on-read resolution + mirror validation when the store
-    # carries upsert deltas (levels are stored in the base dual format
-    # since v4, so they are incrementally maintainable too).  The
-    # stored stack is used only when the caller's stride MATCHES the
-    # write-time geometry (they agree whenever both derive from the
-    # same corpus — the serving slots' case); an explicit non-matching
-    # stride keeps the flat coarse scan, since the stored levels index
-    # different layers than the one the caller asked to enter through.
-    levels = None
-    flat_mod = None
+    # hierarchical entry off the store's own level stack: each level is
+    # opened exactly like the base layer (bucket-pruned lookups, the
+    # SAME merge-on-read resolution + mirror validation when the store
+    # carries upsert deltas).  The stored stack is used only when the
+    # caller's stride MATCHES the write-time geometry (they agree
+    # whenever both derive from the same corpus — the serving slots'
+    # case); an explicit non-matching stride keeps the flat coarse
+    # scan, since the stored levels index different layers than the
+    # one the caller asked to enter through.
+    levels, flat_mod = [], None
     if stride is not None:
         meta = read_l1_meta(spark, path)
-        if meta is not None and int(meta["stride"]) == int(stride):
-            strides = meta.get("strides", [meta["stride"],
-                                           meta["stride2"]])
-            # legacy v3 metas carry only n1: pad with a below-floor
-            # count so the loop terminates at flat_mod = stride·stride2
-            # (exactly the v3 flat-top geometry)
-            counts = meta.get("counts", [meta["n1"], 0])
-            mm = int(meta.get("m", m))
-
-            def level_adj(lvl: int) -> AdjRelation:
-                le = spark.read.parquet(f"{path.rstrip('/')}/_L{lvl}")
-                # pre-v4 layers were written whole (symmetric, no
-                # fwd/mirror split): their rows ARE the traversal
-                # relation, delta markers or not
-                delta_layer = has_deltas and "fwd" in le.columns
-
-                def rel(ids, _le=le, _d=delta_layer):
-                    buckets = sorted({int(i) % n_buckets for i in ids})
-                    sel = _le.filter(F.col("bucket").isin(buckets)
-                                     & F.col("src").isin(ids))
-                    if not _d:
-                        return sel.select("src", "dst")
-                    return sel.select("src", "dst", "sim", "fwd")
-
-                def pred_rel(pred, _le=le, _d=delta_layer):
-                    sel = _le.filter(pred)
-                    if not _d:
-                        return sel.select("src", "dst")
-                    return sel.select("src", "dst", "sim", "fwd")
-
-                return AdjRelation(rel, trusted=not delta_layer, m=mm,
-                                   pred_rel=pred_rel)
-
-            levels = []
-            prod = 1
-            for lvl, (s, cnt) in enumerate(zip(strides, counts),
-                                           start=1):
-                prod *= s
-                if cnt < NSW_HIER_FLOOR:
-                    break
-                levels.append(level_adj(lvl))
-            flat_mod = prod
-            if not levels:
-                levels, flat_mod = None, None
+        if int(meta["stride"]) == int(stride):
+            prods, flat_mod = _level_geometry(meta["strides"],
+                                              meta["counts"])
+            levels = [_stored_layer(spark, _level_path(path, lvl),
+                                    n_buckets, int(meta["m"]),
+                                    has_deltas)
+                      for lvl in range(1, len(prods) + 1)]
 
     return beam_search_knn(lookup, source, qvec, k=k, ef=ef,
                            rounds=rounds, seeds=seeds, vec_col=vec_col,

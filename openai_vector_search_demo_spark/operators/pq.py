@@ -515,7 +515,7 @@ def upsert_ivfpq_index(spark, df: DataFrame, path: str,
     and a streaming-rate maintenance job; ``compact_ivfpq_index`` is
     the periodic compaction that folds batches back to a marker-free
     store."""
-    import os
+    from openai_vector_search_demo_spark.stores import fs_write_text
 
     existing = spark.read.option("basePath", path).parquet(path)
     # Columns come from the STORE's schema, not the batch's (ADVICE r11):
@@ -549,8 +549,9 @@ def upsert_ivfpq_index(spark, df: DataFrame, path: str,
         out = tombs.unionByName(fresh)
     (out.repartition(F.col("cell"))
      .write.mode("append").partitionBy("cell").parquet(path))
-    with open(os.path.join(path, _UPSERT_MARKER), "w") as fh:
-        fh.write(str(batch))
+    # Hadoop-FS write: the marker lands next to the data on ANY store
+    # URI (a driver-local open() fails on file:// and misses s3a://)
+    fs_write_text(spark, f"{path.rstrip('/')}/{_UPSERT_MARKER}", str(batch))
     return batch
 
 
@@ -619,10 +620,9 @@ def ivfpq_stored_knn(spark, store: str, qvec: Sequence[float],
         ivf_probe_cells_dot,
     )
     from openai_vector_search_demo_spark.stores import (
+        fs_exists,
         read_probed_partitions,
     )
-
-    import os
 
     probes = ivf_probe_cells_dot(qvec, centroids, nprobe)
     luts = residual_adc_luts(qvec, centroids, codebooks, probes)
@@ -644,7 +644,7 @@ def ivfpq_stored_knn(spark, store: str, qvec: Sequence[float],
     # latest-wins over the probed rows before scoring — stale versions
     # and tombstoned ids drop here.  Marker-free stores skip this
     # entirely (no window, no shuffle — the fresh-store fast path).
-    if os.path.exists(os.path.join(store, _UPSERT_MARKER)):
+    if fs_exists(spark, f"{store.rstrip('/')}/{_UPSERT_MARKER}"):
         cand = resolve_ivfpq_versions(cand, id_col)
     elif "batch" in cand.columns:
         cand = cand.drop("batch", "tombstone")

@@ -46,11 +46,9 @@ _NSW_M, _NSW_EF, _NSW_ROUNDS = 16, 12, 8
 _NSW_EF_SERVE = 160   # CONSTANT serving beam width — independent of n (v4)
 _NSW_ENTRY = 16       # base-beam entry points (top of the level-visited set)
 _NSW_W = 16           # per-level beam width AND seed count (constant in n)
-_NSW_SEED_COUNT = _NSW_W  # pre-v4 alias
 _NSW_L1_ROUNDS = 2    # beam rounds per graph-indexed hierarchy level
 _NSW_STOP_K = 32      # early-termination window (operators.nsw.NSW_STOP_K)
 _NSW_HIER_FLOOR = 16  # level size below this -> score the level flat
-_NSW_SEEDS = (1, 101, 201, 301)  # legacy fixed-entry mode (tests only)
 
 
 def _nsw_corpus_n(spark: SparkSession, sf_dir: str, df: DataFrame,
@@ -191,7 +189,7 @@ def _sql_nsw_beam(prefix: str = "", ef: int | None = None,
               OR e.vec_id % ((SELECT stride FROM nswp)
                              * (SELECT stride2 FROM nswp1)) = 0)),
 {p}hf0 AS (SELECT vec_id FROM {p}hv0
-         ORDER BY s DESC, vec_id ASC LIMIT {_NSW_SEED_COUNT})"""]
+         ORDER BY s DESC, vec_id ASC LIMIT {_NSW_W})"""]
     for r in range(1, _NSW_L1_ROUNDS + 1):
         parts.append(f"""{p}hc{r} AS (SELECT DISTINCT g.dst AS vec_id
         FROM nswhsym g JOIN {p}hf{r - 1} f ON g.src = f.vec_id
@@ -247,7 +245,7 @@ def ann_nsw_beam_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbor graph (salt-split blocked BLAS build, per-task memory
     bounded) searched SYMMETRICALLY by the {_NSW_ROUNDS}-round beam
     from a COARSE ENTRY LAYER (the r13 serving semantic: stride = ef =
-    ⌈√n⌉ autoscale, top-{_NSW_SEED_COUNT} coarse nodes as entry —
+    ⌈√n⌉ autoscale, top-{_NSW_W} coarse nodes as entry —
     HNSW's upper layer as one bounded scan).  Candidates come from
     graph locality: per-query cost is Θ(√n·M) score evaluations, not a
     corpus scan.  Scores are exact cosines throughout (the refine is
@@ -466,7 +464,7 @@ bhv0 AS (SELECT qid, vec_id, s FROM bsims
 bhf0 AS (SELECT qid, vec_id FROM (
           SELECT qid, vec_id, ROW_NUMBER() OVER (
             PARTITION BY qid ORDER BY s DESC, vec_id ASC) AS rn
-          FROM bhv0) WHERE rn <= {_NSW_SEED_COUNT})"""]
+          FROM bhv0) WHERE rn <= {_NSW_W})"""]
     for r in range(1, _NSW_L1_ROUNDS + 1):
         parts.append(f"""bhc{r} AS (
   SELECT DISTINCT f.qid, g.dst AS vec_id
@@ -556,7 +554,6 @@ def ann_nsw_mean_recall_at_10(spark: SparkSession,
     bounded collects disappear into the qid key).  Graph over the
     held-out corpus (ids ≥ 20), store cached per corpus fingerprint."""
     from openai_vector_search_demo_spark.operators.nsw import (
-        NSW_HIER_FLOOR,
         beam_search_knn_batch,
         resolve_stored_edges,
         resolve_stored_levels,
@@ -577,18 +574,11 @@ def ann_nsw_mean_recall_at_10(spark: SparkSession,
     stride, ef, rounds = _nsw_stored_params(spark, store)
     # batch serving: resolve the store's undirected traversal relation
     # ONCE per job (merge-on-read window + symmetrize), amortized over
-    # every query in the batch; the L1 layer rides along the same way
-    # (√n-sized, one read)
+    # every query in the batch; the graph levels ride along the same
+    # way (√n-sized and smaller, one read each), with the flat-top
+    # modulus of the store's frozen geometry
     edges = resolve_stored_edges(spark, store, m=_NSW_M)
-    levels, l1_meta = resolve_stored_levels(spark, store, m=_NSW_M)
-    # flat-top predicate from the store's frozen geometry: the product
-    # of every stride down to (and including) the first below-floor
-    # level — v4's generalized stride·stride2
-    flat_mod, counts = 1, l1_meta["counts"]
-    for s, cnt in zip(l1_meta["strides"], counts):
-        flat_mod *= s
-        if cnt < NSW_HIER_FLOOR:
-            break
+    levels, flat_mod, _ = resolve_stored_levels(spark, store)
 
     from openai_vector_search_demo_spark.caching import cache_scope
     from openai_vector_search_demo_spark.functions.vectors import (
@@ -602,8 +592,7 @@ def ann_nsw_mean_recall_at_10(spark: SparkSession,
         allv = beam_search_knn_batch(
             edges, corpus, queries_df, k=1 << 30, ef=ef, rounds=rounds,
             stride=stride, n_entry=_NSW_ENTRY,
-            hier_levels=levels or None,
-            flat_mod=flat_mod if levels else None)
+            hier_levels=levels, flat_mod=flat_mod)
         n_corpus = corpus.filter(F.col("embedding").isNotNull()).count()
         # exact per-qid top-10: one qid-keyed rank over the scored
         # cross relation (the oracle's bsims twin)
@@ -1049,7 +1038,7 @@ def _dedup_capstone_phase_sql(p: str, nodes: str) -> str:
               OR vec_id % ((SELECT stride FROM {p}p)
                            * (SELECT stride2 FROM {p}p1)) = 0)),
 {p}hf0 AS MATERIALIZED (SELECT vec_id FROM {p}hv0
-       ORDER BY s DESC, vec_id ASC LIMIT {_NSW_SEED_COUNT})"""]
+       ORDER BY s DESC, vec_id ASC LIMIT {_NSW_W})"""]
     for r in range(1, _NSW_L1_ROUNDS + 1):
         parts.append(f"""{p}hc{r} AS MATERIALIZED (
          SELECT DISTINCT g.dst AS vec_id
@@ -1159,6 +1148,7 @@ def dedup_graph_index_capstone(spark: SparkSession,
         beam_search_knn,
         build_knn_graph,
         build_l1_graph,
+        nsw_l1_params,
         nsw_serving_params,
         symmetrize_edges,
     )
@@ -1195,11 +1185,13 @@ def dedup_graph_index_capstone(spark: SparkSession,
             n1 = nodes.filter(
                 F.pmod(F.col("vec_id"), F.lit(int(stride))) == 0).count()
             l1 = build_l1_graph(nodes, stride, m=_CAP_M)
+            stride2, hier = nsw_l1_params(n1)
             top = beam_search_knn(symmetrize_edges(edges), nodes, qvec,
                                   k=10, ef=ef, rounds=rounds,
                                   stride=stride,
                                   n_entry=_NSW_ENTRY,
-                                  l1_edges=l1, n1=n1)
+                                  hier_levels=[l1] if hier else None,
+                                  flat_mod=stride * stride2)
             got = {r2.vec_id % 1000 for r2 in top.collect()}
             rows.append((phase, n, n_edges, n_comp,
                          round(len(got & exact) / 10.0, 3)))
@@ -2775,7 +2767,7 @@ cbhv0 AS (SELECT qid, vec_id, s FROM cbqs
 cbhf0 AS (SELECT qid, vec_id FROM (
             SELECT qid, vec_id, ROW_NUMBER() OVER (
               PARTITION BY qid ORDER BY s DESC, vec_id ASC) AS rn
-            FROM cbhv0) WHERE rn <= {_NSW_SEED_COUNT})"""]
+            FROM cbhv0) WHERE rn <= {_NSW_W})"""]
     # the hierarchical ENTRY is mode-independent (L1 is the exact graph
     # over the coarse subset, not the sharded build under test), so one
     # shared qid-keyed L1 beam seeds both modes' base beams
@@ -2885,6 +2877,7 @@ def ann_nsw_cellbuild_mean_recall_at_10(spark: SparkSession,
         beam_search_knn_batch,
         build_knn_graph_sharded,
         build_l1_graph,
+        nsw_l1_params,
         nsw_serving_params,
         symmetrize_edges,
     )
@@ -2918,6 +2911,7 @@ def ann_nsw_cellbuild_mean_recall_at_10(spark: SparkSession,
         n1 = base.filter(
             F.pmod(F.col("vec_id"), F.lit(int(stride))) == 0).count()
         l1 = scoped_persist(build_l1_graph(base, stride, m=_NSW_M))
+        stride2, hier = nsw_l1_params(n1)
         for a in (1, 2):
             edges = build_knn_graph_sharded(
                 corpus.select("vec_id", "embedding"),
@@ -2927,7 +2921,8 @@ def ann_nsw_cellbuild_mean_recall_at_10(spark: SparkSession,
             allv = beam_search_knn_batch(
                 symmetrize_edges(edges), corpus, queries_df,
                 k=1 << 30, ef=ef, rounds=rounds, stride=stride,
-                n_entry=_NSW_ENTRY, l1_edges=l1, n1=n1)
+                n_entry=_NSW_ENTRY, hier_levels=[l1] if hier else None,
+                flat_mod=stride * stride2)
             per = (allv.join(F.broadcast(exact), ["qid", "vec_id"],
                              "left")
                    .groupBy("qid")
@@ -3194,7 +3189,6 @@ def ann_nsw_fixed_ef_scaling(spark: SparkSession,
         cosine_similarity,
     )
     from openai_vector_search_demo_spark.operators.nsw import (
-        NSW_HIER_FLOOR,
         beam_search_knn_batch,
         nsw_serving_params,
         resolve_stored_edges,
@@ -3214,15 +3208,10 @@ def ann_nsw_fixed_ef_scaling(spark: SparkSession,
         lambda path: write_nsw_index(corpus.select("vec_id", "embedding"),
                                      path, m=_NSW_M))
     edges = resolve_stored_edges(spark, store, m=_NSW_M)
-    levels, meta = resolve_stored_levels(spark, store, m=_NSW_M)
+    levels, flat_mod, meta = resolve_stored_levels(spark, store)
     # the oracle unrolls exactly two graph levels — fail loudly if the
     # fixture's geometry ever drifts from that depth
     assert len(levels) == 2, f"expected depth-2 hierarchy, got {meta}"
-    flat_mod = 1
-    for s, cnt in zip(meta["strides"], meta["counts"]):
-        flat_mod *= s
-        if cnt < NSW_HIER_FLOOR:
-            break
     n_corpus = corpus.filter(F.col("embedding").isNotNull()).count()
     # ef/rounds are the registered CONSTANTS (the claim under test);
     # the entry geometry comes from the store's frozen meta

@@ -567,6 +567,63 @@ def test_hierarchical_entry_stored_equals_inline(spark, tmp_path):
     assert stored == inline and len(stored) == 10
 
 
+def test_two_graph_level_store_serving_and_upsert(spark, tmp_path):
+    """A store with TWO graph levels (ids 18·j: L1 is the whole corpus,
+    L2 its 16 multiples of 324, the 4-node flat top the multiples of
+    1296): the frozen geometry, the stored serve, the inline build, the
+    batched engine on the resolved levels, and an upsert that keeps the
+    graph-level products all give one answer."""
+    from openai_vector_search_demo_spark.operators.nsw import (
+        beam_search_knn_batch,
+        nsw_serving_params,
+        read_l1_meta,
+        resolve_stored_edges,
+        resolve_stored_levels,
+        upsert_nsw_index,
+    )
+    rng = np.random.RandomState(11)
+    rows = [(18 * j, j % 4, [round(float(x), 6) for x in rng.randn(DIM)])
+            for j in range(1, 311)]
+    schema = "vec_id long, label int, embedding array<double>"
+    corpus = spark.createDataFrame(rows[:300], schema)
+    batch = spark.createDataFrame(rows[300:], schema)
+    union = spark.createDataFrame(rows, schema)
+    stride, ef, rounds = nsw_serving_params(300)
+    assert stride == 18
+    qvec = [0.2] * DIM
+    store = str(tmp_path / "nsw2")
+    write_nsw_index(corpus, store, m=3, n_buckets=4)
+    meta = read_l1_meta(spark, store)
+    assert (meta["strides"], meta["counts"]) == ([18, 18, 4], [300, 16, 4])
+    levels, flat_mod, _ = resolve_stored_levels(spark, store)
+    assert len(levels) == 2 and flat_mod == 1296
+
+    def stored(path, source):
+        return [(r.vec_id, r.similarity) for r in
+                nsw_stored_knn(spark, path, source, qvec, k=10, ef=ef,
+                               rounds=rounds, n_buckets=4, m=3,
+                               stride=stride).collect()]
+
+    want = stored(store, corpus)
+    assert len(want) == 10
+    assert want == [(r.vec_id, r.similarity) for r in
+                    nsw_knn(corpus, qvec, k=10, m=3, ef=ef, rounds=rounds,
+                            stride=stride).collect()]
+    queries = spark.createDataFrame([(0, qvec)], "qid long, qv array<double>")
+    batched = beam_search_knn_batch(
+        resolve_stored_edges(spark, store, m=3), corpus, queries, k=10,
+        ef=ef, rounds=rounds, stride=stride, hier_levels=levels,
+        flat_mod=flat_mod).orderBy("rank").collect()
+    assert [(r.vec_id, r.similarity) for r in batched] == want
+
+    upsert_nsw_index(spark, store, batch, corpus, m=3, n_buckets=4)
+    meta = read_l1_meta(spark, store)
+    assert (meta["strides"], meta["counts"]) == ([18, 18, 5], [310, 17, 3])
+    fresh = str(tmp_path / "fresh")
+    write_nsw_index(union, fresh, m=3, n_buckets=4)
+    assert stored(store, union) == stored(fresh, union)
+
+
 @pytest.mark.slow
 def test_compact_folds_deltas_and_tombstones(spark, emb, tmp_path):
     """Recompaction closes the maintenance triangle: after upsert +
@@ -739,3 +796,32 @@ def test_topm_from_replays_dense_rank_order():
     ]
     assert _topm_from(rows, 3) == [4, 3, 6]
     assert _topm_from(rows, 5) == [4, 3, 6, 7, 5]
+
+
+def test_query_modules_take_level_geometry_from_nsw():
+    """Structural pin: which levels get a graph is decided in
+    ``operators.nsw`` alone (``_level_geometry``), so no query module
+    imports or reads ``NSW_HIER_FLOOR`` from it to walk a level stack
+    of its own — stored slots take levels and the flat-top modulus
+    from ``resolve_stored_levels``."""
+    import ast
+    import glob
+    import os
+
+    import openai_vector_search_demo_spark.queries as qpkg
+
+    offenders = []
+    for path in sorted(glob.glob(os.path.join(
+            os.path.dirname(qpkg.__file__), "*.py"))):
+        with open(path, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read(), path)
+        for node in ast.walk(tree):
+            imported = (isinstance(node, ast.ImportFrom)
+                        and (node.module or "").endswith("operators.nsw")
+                        and any(a.name == "NSW_HIER_FLOOR"
+                                for a in node.names))
+            read = (isinstance(node, ast.Attribute)
+                    and node.attr == "NSW_HIER_FLOOR")
+            if imported or read:
+                offenders.append(f"{os.path.basename(path)}:{node.lineno}")
+    assert not offenders, offenders

@@ -99,6 +99,25 @@ def test_delete_tombstones_id_everywhere(spark, tmp_path, parts):
     assert victim not in [v for v, _ in _knn(spark, store, qvec, cent, cb)]
 
 
+def test_delete_through_store_uri_tombstones_ids(spark, tmp_path, parts):
+    """Deletes through a ``file://`` store URI take effect exactly as
+    under the plain path: the upsert marker is written and found
+    through the Hadoop FS API, where a driver-local ``open()`` raised
+    after the tombstones were appended and the deleted ids were still
+    served."""
+    from openai_vector_search_demo_spark.operators.pq import (
+        upsert_ivfpq_index, write_ivfpq_index)
+    base, qvec, cent, cb = parts
+    store = tmp_path / "uri"
+    write_ivfpq_index(base, str(store), cent, cb)
+    victims = [v for v, _ in _knn(spark, str(store), qvec, cent, cb)[:3]]
+    upsert_ivfpq_index(spark, base.filter(F.col("vec_id").isin(victims)),
+                       store.as_uri(), cent, cb, delete=True)
+    for form in (str(store), store.as_uri()):
+        served = [v for v, _ in _knn(spark, form, qvec, cent, cb)]
+        assert len(served) == 10 and set(victims).isdisjoint(served)
+
+
 def test_ids_only_delete_batch_keeps_store_meta_schema(spark, tmp_path,
                                                        parts):
     """ADVICE r11: a delete batch carrying ONLY ids (the docstring-invited
